@@ -10,11 +10,17 @@ Usage:
         driver writes, same staleness order as the queries() rotation) —
         one command reproduces the judge's "check what the driver window
         hasn't seen" sweep. A full no-arg run is the pre-snapshot gate.
+
+The session runs with ``spark.sql.codegen.fallback=false``: a query whose
+generated code fails to compile (e.g. a projection past the JVM's 64 KB
+method limit) fails its row instead of silently running interpreted, and
+the summary counts those rows as codegen-failed.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 import time
 
@@ -24,6 +30,8 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
+#: what a whole-stage codegen compile failure looks like in a Spark error
+CODEGEN_FAILURE = re.compile(r"InternalCompilerException|Code grows beyond|failed to compile")
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
 
@@ -45,6 +53,7 @@ def main() -> int:
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", "6g")
+        .config("spark.sql.codegen.fallback", "false")
         .getOrCreate()
     )
     import __spark_entry__ as entry_mod
@@ -68,6 +77,7 @@ def main() -> int:
     else:
         only = argv
     failures = []
+    codegen_failed = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
@@ -76,6 +86,8 @@ def main() -> int:
             sdf = fn(spark, SF_DIR).toPandas()
         except Exception as e:
             failures.append(name)
+            if CODEGEN_FAILURE.search(str(e)):
+                codegen_failed.append(name)
             print(f"FAIL  {name}: spark error {type(e).__name__}: {str(e)[:300]}")
             continue
         t1 = time.time()
@@ -106,6 +118,10 @@ def main() -> int:
             continue
         print(f"OK    {name}: {len(a)} rows match ({t1 - t0:.1f}s spark)")
     print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    print(
+        f"{len(codegen_failed)} codegen-failed"
+        + (f": {codegen_failed}" if codegen_failed else "")
+    )
     return 1 if failures else 0
 
 

@@ -120,25 +120,26 @@ def clip_suite(include_audio: bool = True, include_drift: bool = True) -> Suite:
 def image_shape() -> Shape:
     """ImageShape: the image-modality analog of clip_shape — container
     integrity and dims-vs-catalog-metadata checks expressed as `expr`
-    constraints over the SAME pure-builtin header arithmetic the imagery
-    metadata op uses (imagery.image_ok_sql / image_dims_match_sql), so
+    constraints over the SAME staged header parse the imagery metadata
+    op uses (headers.image_stages, exactly ``image_meta``'s status), so
     the validation engine covers image tables with zero new constraint
     kinds and zero UDFs in the constraint path."""
-    from shaclapi_spark.pipeline import imagery
+    from shaclapi_spark.pipeline import headers
 
-    # derive-once-check-many: the container-header parses are ~100-node
-    # expression trees; deriving them as shape columns keeps each
-    # constraint a plain column read instead of re-expanding the tree
-    # (engine Shape.derived_columns — measured 5x on this suite)
+    # derive-once-check-many, in stages (bytes -> header -> fields ->
+    # verdict): each constraint is a plain column read and each stage a
+    # projection small enough for whole-stage codegen
     return Shape(
         name="ImageShape",
         table="images",
         entity_col="img_id",
         derived_columns={
-            "__img_ok": imagery.image_ok_sql("bytes"),
-            "__img_dims_ok": imagery.image_dims_match_sql(
-                "bytes", "meta_w", "meta_h"
-            ),
+            **headers.derived(headers.image_stages("bytes")),
+            "__img_ok": "__img_status = 'ok'",
+            # header dims as magnitudes: a top-down BMP (negative i32
+            # height) still matches its positive catalog height
+            "__img_dims_ok": "__img_w = CAST(meta_w AS BIGINT)"
+            " AND __img_h = CAST(meta_h AS BIGINT)",
         },
         constraints=[
             Constraint("img_unique", "unique", {"column": "img_id"}),
@@ -164,20 +165,19 @@ def image_suite() -> Suite:
 
 def video_shape() -> Shape:
     """VideoShape: SGV1 container integrity + frame-count-vs-catalog-
-    metadata checks as pure-builtin `expr` constraints (imagery.
-    video_ok_sql / video_frames_match_sql) — the video leg of the
-    multimodal validation surface."""
-    from shaclapi_spark.pipeline import imagery
+    metadata checks as pure-builtin `expr` constraints over the staged
+    header parse (headers.video_stages, exactly ``video_meta``'s status)
+    — the video leg of the multimodal validation surface."""
+    from shaclapi_spark.pipeline import headers
 
     return Shape(
         name="VideoShape",
         table="videos",
         entity_col="vid_id",
         derived_columns={
-            "__vid_ok": imagery.video_ok_sql("bytes"),
-            "__vid_frames_ok": imagery.video_frames_match_sql(
-                "bytes", "meta_frames"
-            ),
+            **headers.derived(headers.video_stages("bytes")),
+            "__vid_ok": "__vid_status = 'ok'",
+            "__vid_frames_ok": "__sgv1_n = CAST(meta_frames AS BIGINT)",
         },
         constraints=[
             Constraint("vid_unique", "unique", {"column": "vid_id"}),

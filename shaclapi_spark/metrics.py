@@ -32,15 +32,14 @@ class MetricsRecorder:
     when set, only the most recent ``max_rows`` entries are kept, so a
     recorder shared across a long-running service's requests stays
     bounded (round-4 advice — an uncapped recorder grows without limit
-    and /metrics payloads with it). Caveat: once rows are evicted,
-    ``mark_first``'s exactly-once check can no longer see stages older
-    than the window; per-run recorders (the default everywhere except
-    the service) are unaffected because they never hit the cap."""
+    and /metrics payloads with it). ``mark_first`` remembers the stages
+    it has marked outside the ring, so eviction never re-arms it."""
 
     run_id: str
     rows: list[tuple] = field(default_factory=list)
     trace: list[tuple] = field(default_factory=list)
     max_rows: int | None = None
+    _first_marked: set[str] = field(default_factory=set, init=False, repr=False)
 
     def _cap(self) -> None:
         if self.max_rows is not None:
@@ -71,8 +70,9 @@ class MetricsRecorder:
         """Record a first-emission latency row (e.g. first verdict wave /
         micro-batch landing — the analog of the reference's first-result
         timestamp, ValidationResultTransmitter.py:21-24) exactly once."""
-        if any(r[1] == stage for r in self.rows):
+        if stage in self._first_marked:
             return
+        self._first_marked.add(stage)
         self.record(stage, time.time() - since_ts, n_rows)
 
     def mark_emission(self, since_ts: float, n_rows: int | None = None) -> None:

@@ -22,8 +22,8 @@ of the SIGNAL, not just the metadata row:
   (2*R(best) > R(0)) separates tonal from noise-like content.
 * ``container_stats`` / ``container_summary`` — header/payload integrity
   accounting (bad magic, unknown codec, truncated payload, container
-  overhead vs raw PCM) parsed from the binary column with ``hex`` +
-  ``conv`` + ``substring`` ONLY: no UDF, the whole relation stays inside
+  overhead vs raw PCM) read from the 64-byte header prefix by the shared
+  parser in ``pipeline.headers``: no UDF, the whole relation stays inside
   whole-stage codegen.
 
 Scale shape: the two decode ops are single Arrow-batched ``mapInPandas``
@@ -44,7 +44,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BooleanType,
@@ -55,6 +55,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from shaclapi_spark.pipeline import headers
 from shaclapi_spark.pipeline.dedup import drop_hot_groups
 
 ZCR_SCHEMA = StructType(
@@ -304,35 +305,15 @@ def pitch_period(
     )
 
 
-# SGA1 container layout (audio_codec.HEADER): magic(4) codec(1) sr(u32le)
-# n(u32le) freq(f32) amp(f32) = 21 header bytes, then n u16le samples.
-_HDR_BYTES = 21
-_MAGIC_HEX = "53474131"  # b"SGA1"
-
-
-def _le_u32(h: Column, byte_off: int) -> Column:
-    """Little-endian u32 at byte offset ``byte_off`` of hex string ``h``
-    (1-based bytes: byte k occupies hex chars 2k-1..2k), as a long —
-    built-ins only (substring + conv)."""
-    p = 2 * byte_off - 1
-    be = F.concat(
-        F.substring(h, p + 6, 2),
-        F.substring(h, p + 4, 2),
-        F.substring(h, p + 2, 2),
-        F.substring(h, p, 2),
-    )
-    return F.conv(be, 16, 10).cast("long")
-
-
 def container_stats(
     df: DataFrame,
     id_col: str = "clip_id",
     bytes_col: str = "bytes",
     carry_cols: tuple[str, ...] = (),
 ) -> DataFrame:
-    """Per-clip container-integrity relation parsed with JVM built-ins
-    ONLY (hex / substring / conv / length — no UDF, fully inside
-    whole-stage codegen): header magic + codec id + declared sample
+    """Per-clip container-integrity relation from the shared bounded
+    header parser (``headers.audio_stages`` — JVM built-ins only, no UDF,
+    inside whole-stage codegen): header magic + codec id + declared sample
     count, payload size vs declared raw PCM size, and a ``status``
     verdict mirroring ``decode_clip``'s rejection order
     (null -> bad_magic -> bad_codec -> truncated -> ok).
@@ -344,30 +325,19 @@ def container_stats(
     rows (magic ok) and NULL otherwise. ``carry_cols`` are projected
     through unchanged (same physical row — no join, so seeded duplicate
     ids stay one row each)."""
-    h = F.upper(F.hex(F.col(bytes_col)))
-    blen = F.length(F.col(bytes_col)).cast("long")
-    magic_ok = F.substring(h, 1, 8) == F.lit(_MAGIC_HEX)
-    codec_id = F.conv(F.substring(h, 9, 2), 16, 10).cast("int")
-    n = _le_u32(h, 10)  # bytes 10-13 (after magic(4)+codec(1)+sr(4))
-    sr = _le_u32(h, 6)
-    status = (
-        F.when(F.col(bytes_col).isNull(), F.lit("null"))
-        .when(blen < F.lit(_HDR_BYTES), F.lit("bad_magic"))
-        .when(~magic_ok, F.lit("bad_magic"))
-        .when(~codec_id.isin(0, 1, 2), F.lit("bad_codec"))
-        .when(blen < F.lit(_HDR_BYTES) + 2 * n, F.lit("truncated"))
-        .otherwise(F.lit("ok"))
-    )
-    parseable = F.col(bytes_col).isNotNull() & (blen >= _HDR_BYTES) & magic_ok
-    return df.select(
+    m = headers.project(df, headers.audio_stages(bytes_col))
+    parseable = F.col("__sga1_status").isin("bad_codec", "truncated", "ok")
+    return m.select(
         F.col(id_col),
         *[F.col(c) for c in carry_cols],
-        status.alias("status"),
-        F.when(parseable, codec_id).alias("codec_id"),
-        F.when(parseable, sr).alias("hdr_sr"),
-        F.when(parseable, n).alias("hdr_n"),
-        F.when(parseable, blen - _HDR_BYTES).alias("payload_bytes"),
-        F.when(parseable, 2 * n).alias("raw_bytes"),
+        F.col("__sga1_status").alias("status"),
+        F.when(parseable, F.col("__sga1_codec").cast("int")).alias("codec_id"),
+        F.when(parseable, F.col("__sga1_sr")).alias("hdr_sr"),
+        F.when(parseable, F.col("__sga1_n")).alias("hdr_n"),
+        F.when(
+            parseable, F.col("__blen") - headers.SGA1_HEADER_BYTES
+        ).alias("payload_bytes"),
+        F.when(parseable, 2 * F.col("__sga1_n")).alias("raw_bytes"),
     )
 
 

@@ -17,9 +17,10 @@ same standard as the audio stack:
   deterministic-container discipline as audio's SGA1
   (audio_codec.HEADER); real mp4/webm decode needs ffmpeg and stays
   gated in multimodal.decode_image/sample_video_frames.
-* metadata ops (``image_meta`` / ``video_meta``) parse headers with JVM
-  built-ins ONLY (hex / substring / conv / length — whole-stage codegen,
-  no UDF), mirroring audio_analysis.container_stats:303-371.
+* metadata ops (``image_meta`` / ``video_meta``) read the 64-byte header
+  prefix through the shared parser in ``pipeline.headers`` (JVM built-ins
+  only, staged projections inside whole-stage codegen, no UDF) — the same
+  rule the image/video validation suites derive their columns from.
 * pixel ops (``image_pixel_stats`` / ``image_resize_stats`` /
   ``video_frame_stats``) are one shuffle-free Arrow ``mapInPandas`` pass
   each, emitting INTEGER-EXACT statistics (sums / mins / maxes of uint8
@@ -46,9 +47,17 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import DataFrame, functions as F
 
+from shaclapi_spark.pipeline import headers
 from shaclapi_spark.pipeline.dedup import drop_hot_groups
+from shaclapi_spark.pipeline.headers import (
+    BMP_HEADER_BYTES,
+    PPM_HEADER_BYTES,
+    VIDEO_HEADER,
+    VIDEO_HEADER_BYTES,
+    VIDEO_MAGIC,
+)
 
 # ---------------------------------------------------------------------------
 # deterministic synthesis (fixture side — pure numpy, no Spark)
@@ -77,9 +86,6 @@ def synth_pixels(idx: int, w: int, h: int) -> np.ndarray:
     return np.stack(chans, axis=-1)
 
 
-BMP_HEADER_BYTES = 54  # BITMAPFILEHEADER(14) + BITMAPINFOHEADER(40)
-
-
 def bmp_row_bytes(w: int) -> int:
     """BGR row stride padded to a 4-byte boundary (the BMP spec rule)."""
     return (3 * w + 3) & ~3
@@ -102,10 +108,6 @@ def encode_bmp(pix: np.ndarray) -> bytes:
     for y in range(h - 1, -1, -1):  # bottom-up
         rows += pix[y, :, ::-1].tobytes() + pad  # RGB -> BGR
     return hdr + bytes(rows)
-
-
-#: fixed-width P6 header the fixture emits: "P6\n%5d %5d\n255\n" = 19 bytes
-PPM_HEADER_BYTES = 19
 
 
 def encode_ppm(pix: np.ndarray) -> bytes:
@@ -134,11 +136,6 @@ def synth_image_bytes(idx: int, w: int, h: int) -> bytes | None:
 
 
 # --- video: SGV1 concatenated grayscale frames ------------------------------
-
-VIDEO_MAGIC = b"SGV1"
-VIDEO_HEADER = "<4sHHHB"  # magic, w, h, n_frames, fps
-VIDEO_HEADER_BYTES = struct.calcsize(VIDEO_HEADER)  # 11
-
 
 def _video_coeffs(idx: int) -> tuple:
     """(a, b, c, p): spatial gradient + per-frame temporal motion."""
@@ -271,46 +268,8 @@ def sample_video_frames(blob: bytes, every_n: int = 30) -> list:
 
 
 # ---------------------------------------------------------------------------
-# metadata ops — JVM built-ins only (hex/substring/conv), zero UDF
+# metadata ops — the shared bounded header parser (pipeline.headers), zero UDF
 # ---------------------------------------------------------------------------
-
-# little-endian u32 hex-field parse: shared with the audio container
-# metadata op (same 1-based byte-offset convention)
-from shaclapi_spark.pipeline.audio_analysis import _le_u32  # noqa: E402
-
-
-def _le_u16(h: Column, byte_off: int) -> Column:
-    p = 2 * byte_off - 1
-    return F.conv(
-        F.concat(F.substring(h, p + 2, 2), F.substring(h, p, 2)), 16, 10
-    ).cast("long")
-
-
-#: parsed-dimension sanity ceiling: headers claiming a side beyond this are
-#: classified 'unsupported' BEFORE any size arithmetic — a u32 width times a
-#: u32 height times 3 overflows int64 (ANSI mode would abort the job on ONE
-#: hostile row; non-ANSI would silently wrap and can mislabel a truncated
-#: blob 'ok'). 2^20 px per side is far beyond any real still image.
-MAX_DIM = 1 << 20
-
-
-def _ascii_int(h: Column, byte_off: int, n_bytes: int) -> Column:
-    """Decimal integer stored as ``n_bytes`` ascii chars (space-padded) at
-    1-based byte offset, parsed with conv/CASE digit folding ONLY — no
-    decode() (ANSI throws MALFORMED_CHARACTER_CODING on non-UTF-8 header
-    bytes) and no throwing CAST. Non-digit bytes fold as skips; a field
-    with NO digits at all yields NULL (distinguishing 'no number here'
-    from a legitimate 0)."""
-    acc: Column = F.lit(0).cast("long")
-    any_digit: Column = F.lit(False)
-    for i in range(n_bytes):
-        p = 2 * (byte_off + i) - 1
-        v = F.conv(F.substring(h, p, 2), 16, 10).cast("long")
-        is_digit = (v >= 48) & (v <= 57)
-        acc = F.when(is_digit, acc * 10 + v - 48).otherwise(acc)
-        any_digit = any_digit | is_digit
-    return F.when(any_digit, acc)
-
 
 def image_meta(
     df: DataFrame,
@@ -318,100 +277,31 @@ def image_meta(
     bytes_col: str = "bytes",
     carry_cols: tuple = (),
 ) -> DataFrame:
-    """Per-image container metadata parsed with JVM built-ins ONLY (no
-    UDF — stays inside whole-stage codegen): format, declared width /
-    height / bits-per-pixel, the payload size the header implies, the
-    actual byte length, and a ``status`` verdict mirroring
-    ``decode_image``'s rejection order (null -> bad_magic -> unsupported
-    -> truncated -> ok). PPM parsing assumes the fixture's fixed-width
+    """Per-image container metadata from the 64-byte header prefix, JVM
+    built-ins only (``headers.image_stages`` — staged projections inside
+    whole-stage codegen): format, declared width / height /
+    bits-per-pixel, the payload size the header implies, the actual byte
+    length, and a ``status`` verdict mirroring ``decode_image``'s
+    rejection order (null -> bad_magic -> truncated -> unsupported ->
+    truncated -> ok). PPM parsing assumes the fixture's fixed-width
     19-byte header (module docstring); BMP parsing is the real spec.
 
     Scale shape: one scan, zero shuffle, bytes never leave the scan
     stage (only fixed-width integers are projected out)."""
-    h = F.upper(F.hex(F.col(bytes_col)))
-    blen = F.length(F.col(bytes_col)).cast("long")
-    is_bmp = F.substring(h, 1, 4) == F.lit("424D")  # "BM"
-    is_ppm = F.substring(h, 1, 4) == F.lit("5036")  # "P6"
-
-    bmp_w = _le_u32(h, 19)
-    # height is SIGNED i32 per the BMP spec: negative marks a top-down
-    # row order (decode_image honors it) — sign-extend, keep magnitude
-    bmp_h_raw = _le_u32(h, 23)
-    bmp_h_signed = F.when(
-        bmp_h_raw >= F.lit(1 << 31), bmp_h_raw - F.lit(1 << 32)
-    ).otherwise(bmp_h_raw)
-    bmp_h = F.abs(bmp_h_signed)
-    bmp_bpp = _le_u16(h, 29)
-    bmp_comp = _le_u32(h, 31)
-    bmp_off = _le_u32(h, 11)
-    bmp_hdr_size = _le_u32(h, 15)
-    bmp_planes = _le_u16(h, 27)
-    # dims sanity BEFORE any size product: a u32 × u32 × 3 passes int64
-    # and ANSI mode aborts the whole job on ONE hostile header (or
-    # non-ANSI silently wraps); the CASE-guard keeps the product lazy
-    bmp_sane = (
-        (bmp_w >= 1)
-        & (bmp_w <= F.lit(MAX_DIM))
-        & (bmp_h >= 1)
-        & (bmp_h <= F.lit(MAX_DIM))
-        & (bmp_off <= F.lit(MAX_DIM))
-    )
-    bmp_stride = F.floor((F.lit(3) * bmp_w + F.lit(3)) / 4) * 4
-    bmp_need = F.when(bmp_sane, bmp_off + bmp_stride * bmp_h)
-
-    ppm_w = _ascii_int(h, 4, 5)
-    ppm_h = _ascii_int(h, 10, 5)
-    # 5 ascii digits cap at 99,999: 3·w·h <= 3e10, no overflow possible
-    ppm_sane = (
-        ppm_w.isNotNull() & ppm_h.isNotNull() & (ppm_w >= 1) & (ppm_h >= 1)
-    )
-    ppm_need = F.when(
-        ppm_sane, F.lit(PPM_HEADER_BYTES) + F.lit(3) * ppm_w * ppm_h
-    )
-
-    fmt = F.when(is_bmp, F.lit("bmp")).when(is_ppm, F.lit("ppm"))
-    width = F.when(is_bmp, bmp_w).when(is_ppm, ppm_w)
-    height = F.when(is_bmp, bmp_h).when(is_ppm, ppm_h)
-    bpp = F.when(is_bmp, bmp_bpp).when(is_ppm, F.lit(24).cast("long"))
-    need = F.when(is_bmp, bmp_need).when(is_ppm, ppm_need)
-
-    # rejection order mirrors decode_image: magic first, then header
-    # truncation, then variant support (incl. insane dims), then
-    # payload-size truncation
-    status = (
-        F.when(F.col(bytes_col).isNull(), F.lit("null"))
-        .when(~(is_bmp | is_ppm), F.lit("bad_magic"))
-        .when(is_bmp & (blen < F.lit(BMP_HEADER_BYTES)), F.lit("truncated"))
-        .when(is_ppm & (blen < F.lit(PPM_HEADER_BYTES)), F.lit("truncated"))
-        .when(
-            is_bmp
-            & (
-                (bmp_bpp != 24)
-                | (bmp_comp != 0)
-                | (bmp_planes != 1)
-                | (bmp_hdr_size < 40)
-            ),
-            F.lit("unsupported"),
-        )
-        .when(is_bmp & ~bmp_sane, F.lit("unsupported"))
-        .when(is_ppm & ~ppm_sane, F.lit("unsupported"))
-        .when(blen < need, F.lit("truncated"))
-        .otherwise(F.lit("ok"))
-    )
-    parseable = F.col(bytes_col).isNotNull() & (
-        (is_bmp & (blen >= F.lit(BMP_HEADER_BYTES)))
-        | (is_ppm & (blen >= F.lit(PPM_HEADER_BYTES)))
-    )
-    return df.select(
+    m = headers.project(df, headers.image_stages(bytes_col))
+    parseable = F.col("__blen") >= F.col("__img_hdr_len")
+    return m.select(
         F.col(id_col),
         *[F.col(c) for c in carry_cols],
-        status.alias("status"),
-        F.when(parseable, fmt).alias("fmt"),
-        F.when(parseable, width).alias("width"),
-        F.when(parseable, height).alias("height"),
-        F.when(parseable, bpp).alias("bpp"),
-        F.when(parseable, need).alias("need_bytes"),
-        blen.alias("actual_bytes"),
+        F.col("__img_status").alias("status"),
+        *[
+            F.when(parseable, F.col(f"__img_{f}")).alias(out)
+            for f, out in (
+                ("fmt", "fmt"), ("w", "width"), ("h", "height"),
+                ("bpp", "bpp"), ("need", "need_bytes"),
+            )
+        ],
+        F.col("__blen").alias("actual_bytes"),
     )
 
 
@@ -421,38 +311,23 @@ def video_meta(
     bytes_col: str = "bytes",
     carry_cols: tuple = (),
 ) -> DataFrame:
-    """Per-video SGV1 container metadata with JVM built-ins only — same
-    discipline and rejection order as ``image_meta``."""
-    h = F.upper(F.hex(F.col(bytes_col)))
-    blen = F.length(F.col(bytes_col)).cast("long")
-    magic_ok = F.substring(h, 1, 8) == F.lit("53475631")  # "SGV1"
-    w = _le_u16(h, 5)
-    ht = _le_u16(h, 7)
-    n = _le_u16(h, 9)
-    fps = F.conv(F.substring(h, 21, 2), 16, 10).cast("long")
-    need = F.lit(VIDEO_HEADER_BYTES) + n * ht * w
-    status = (
-        F.when(F.col(bytes_col).isNull(), F.lit("null"))
-        .when(blen < F.lit(VIDEO_HEADER_BYTES), F.lit("bad_magic"))
-        .when(~magic_ok, F.lit("bad_magic"))
-        .when(blen < need, F.lit("truncated"))
-        .otherwise(F.lit("ok"))
-    )
-    parseable = (
-        F.col(bytes_col).isNotNull()
-        & (blen >= F.lit(VIDEO_HEADER_BYTES))
-        & magic_ok
-    )
-    return df.select(
+    """Per-video SGV1 container metadata (``headers.video_stages``) —
+    same discipline and rejection order as ``image_meta``."""
+    m = headers.project(df, headers.video_stages(bytes_col))
+    parseable = F.col("__vid_status").isin("truncated", "ok")
+    return m.select(
         F.col(id_col),
         *[F.col(c) for c in carry_cols],
-        status.alias("status"),
-        F.when(parseable, w).alias("width"),
-        F.when(parseable, ht).alias("height"),
-        F.when(parseable, n).alias("n_frames"),
-        F.when(parseable, fps).alias("fps"),
-        F.when(parseable, need).alias("need_bytes"),
-        blen.alias("actual_bytes"),
+        F.col("__vid_status").alias("status"),
+        *[
+            F.when(parseable, F.col(c)).alias(out)
+            for c, out in (
+                ("__sgv1_w", "width"), ("__sgv1_h", "height"),
+                ("__sgv1_n", "n_frames"), ("__sgv1_fps", "fps"),
+                ("__vid_need", "need_bytes"),
+            )
+        ],
+        F.col("__blen").alias("actual_bytes"),
     )
 
 
@@ -770,128 +645,6 @@ def dhash_neardups(
 
 
 # ---------------------------------------------------------------------------
-# validation-suite surface: image-integrity predicates as Spark-SQL text,
-# so the CONSTRAINT ENGINE can validate image tables with `expr` constraints
-# (the image analog of the audio SNR constraint kind)
-# ---------------------------------------------------------------------------
-
-def _le_u32_sql(h: str, byte_off: int) -> str:
-    p = 2 * byte_off - 1
-    return (
-        f"CAST(conv(concat(substring({h},{p+6},2),substring({h},{p+4},2),"
-        f"substring({h},{p+2},2),substring({h},{p},2)),16,10) AS BIGINT)"
-    )
-
-
-def _le_u16_sql(h: str, byte_off: int) -> str:
-    p = 2 * byte_off - 1
-    return (
-        f"CAST(conv(concat(substring({h},{p+2},2),substring({h},{p},2))"
-        f",16,10) AS BIGINT)"
-    )
-
-
-def _ppm_dim_sql(h: str, byte_off: int, n_bytes: int = 5) -> str:
-    """The fixture's fixed-width space-padded ascii decimal field parsed
-    with PURE conv/CASE arithmetic — no decode(), no throwing CAST: under
-    ANSI mode Spark may evaluate an AND/OR's subexpressions eagerly, so a
-    BMP row reaching a PPM-branch ``CAST(decode(...))`` would throw on
-    its (arbitrary-byte) header. Each byte folds left-to-right:
-    acc = acc*10 + digit when the byte is '0'..'9', else acc."""
-    acc = "CAST(0 AS BIGINT)"
-    for i in range(n_bytes):
-        p = 2 * (byte_off + i) - 1
-        v = f"CAST(conv(substring({h},{p},2),16,10) AS BIGINT)"
-        acc = (
-            f"(CASE WHEN {v} BETWEEN 48 AND 57"
-            f" THEN ({acc}) * 10 + {v} - 48 ELSE ({acc}) END)"
-        )
-    return acc
-
-
-def image_ok_sql(bytes_col: str = "bytes") -> str:
-    """Boolean Spark-SQL text: the blob parses as a structurally-sound
-    24-bit BMP or (fixed-width-header) PPM whose payload is complete —
-    ``image_meta().status = 'ok'`` as a single expression, usable as an
-    engine ``expr`` constraint over an image table. Built-ins only, so
-    the constraint evaluates scan-side inside whole-stage codegen; the
-    DuckDB oracle replays it through the identical hex arithmetic."""
-    h = f"upper(hex({bytes_col}))"
-    blen = f"CAST(length({bytes_col}) AS BIGINT)"
-    bmp_w = _le_u32_sql(h, 19)
-    # signed i32 height (negative = spec's top-down marker): sign-extend,
-    # compare on the magnitude
-    bmp_h = (
-        f"abs(CASE WHEN {_le_u32_sql(h, 23)} >= {1 << 31}"
-        f" THEN {_le_u32_sql(h, 23)} - {1 << 32}"
-        f" ELSE {_le_u32_sql(h, 23)} END)"
-    )
-    bmp_bpp = _le_u16_sql(h, 29)
-    bmp_comp = _le_u32_sql(h, 31)
-    bmp_off = _le_u32_sql(h, 11)
-    stride = f"((3 * {bmp_w} + 3) div 4) * 4"
-    # sanity-cap the dims BEFORE the size product (u32·u32·3 passes int64:
-    # ANSI aborts the job on one hostile header, non-ANSI silently wraps);
-    # the CASE keeps the product from ever evaluating on insane dims
-    bmp_sane = (
-        f"({bmp_w} BETWEEN 1 AND {MAX_DIM}"
-        f" AND {bmp_h} BETWEEN 1 AND {MAX_DIM}"
-        f" AND {bmp_off} <= {MAX_DIM})"
-    )
-    bmp_fits = (
-        f"(CASE WHEN {bmp_sane}"
-        f" THEN {blen} >= {bmp_off} + {stride} * {bmp_h}"
-        f" ELSE false END)"
-    )
-    ppm_w = _ppm_dim_sql(h, 4)
-    ppm_h = _ppm_dim_sql(h, 10)
-    return (
-        f"({bytes_col} IS NOT NULL AND ("
-        f"(substring({h},1,4) = '424D' AND {blen} >= {BMP_HEADER_BYTES}"
-        f" AND {bmp_bpp} = 24 AND {bmp_comp} = 0"
-        f" AND {_le_u16_sql(h, 27)} = 1 AND {_le_u32_sql(h, 15)} >= 40"
-        f" AND {bmp_fits})"
-        f" OR "
-        f"(substring({h},1,4) = '5036' AND {blen} >= {PPM_HEADER_BYTES}"
-        # garbage ascii folds to 0 in _ppm_dim_sql — a >= 1 floor rejects
-        # both unparseable and zero-dim headers (5 digits cap the product
-        # at 3e10, no overflow risk)
-        f" AND {ppm_w} >= 1 AND {ppm_h} >= 1"
-        f" AND {blen} >= {PPM_HEADER_BYTES} + 3 * {ppm_w} * {ppm_h})"
-        f"))"
-    )
-
-
-def image_dims_match_sql(
-    bytes_col: str = "bytes", w_col: str = "meta_w", h_col: str = "meta_h"
-) -> str:
-    """Boolean Spark-SQL text: the container header's declared dimensions
-    equal the catalog's metadata columns — the image analog of the clip
-    fixture's hdr-vs-metadata checks. Rows whose container cannot be
-    parsed are NOT excused here (combine with ``image_ok_sql`` in an
-    engine ``or``/precondition when that is the wanted semantics)."""
-    h = f"upper(hex({bytes_col}))"
-    signed_h = (
-        f"abs(CASE WHEN {_le_u32_sql(h, 23)} >= {1 << 31}"
-        f" THEN {_le_u32_sql(h, 23)} - {1 << 32}"
-        f" ELSE {_le_u32_sql(h, 23)} END)"
-    )
-    bmp = (
-        f"(substring({h},1,4) = '424D'"
-        f" AND {_le_u32_sql(h, 19)} = CAST({w_col} AS BIGINT)"
-        # height magnitude: a spec-conforming top-down BMP (negative i32
-        # height) still matches its positive catalog height
-        f" AND {signed_h} = CAST({h_col} AS BIGINT))"
-    )
-    ppm = (
-        f"(substring({h},1,4) = '5036'"
-        f" AND {_ppm_dim_sql(h, 4)} = CAST({w_col} AS BIGINT)"
-        f" AND {_ppm_dim_sql(h, 10)} = CAST({h_col} AS BIGINT))"
-    )
-    return f"({bytes_col} IS NOT NULL AND ({bmp} OR {ppm}))"
-
-
-# ---------------------------------------------------------------------------
 # video content fingerprint — per-sampled-frame dHash tokens
 # ---------------------------------------------------------------------------
 
@@ -991,35 +744,6 @@ def video_content_matches(
         if t is not base:
             base.unpersist()
     return out
-
-
-def video_ok_sql(bytes_col: str = "bytes") -> str:
-    """Boolean Spark-SQL text: the blob is a structurally-complete SGV1
-    container — ``video_meta().status = 'ok'`` as one expression, usable
-    as an engine ``expr`` constraint over a video table. u16 dims cap the
-    size product at 65535³ < 2^48, so no overflow guard is needed."""
-    h = f"upper(hex({bytes_col}))"
-    blen = f"CAST(length({bytes_col}) AS BIGINT)"
-    w = _le_u16_sql(h, 5)
-    hh = _le_u16_sql(h, 7)
-    n = _le_u16_sql(h, 9)
-    return (
-        f"({bytes_col} IS NOT NULL AND {blen} >= {VIDEO_HEADER_BYTES}"
-        f" AND substring({h},1,8) = '53475631'"
-        f" AND {blen} >= {VIDEO_HEADER_BYTES} + {n} * {hh} * {w})"
-    )
-
-
-def video_frames_match_sql(
-    bytes_col: str = "bytes", n_col: str = "meta_frames"
-) -> str:
-    """Boolean Spark-SQL text: the header's frame count equals the
-    catalog metadata column (the video analog of image_dims_match_sql)."""
-    h = f"upper(hex({bytes_col}))"
-    return (
-        f"({bytes_col} IS NOT NULL AND substring({h},1,8) = '53475631'"
-        f" AND {_le_u16_sql(h, 9)} = CAST({n_col} AS BIGINT))"
-    )
 
 
 THUMB_SCHEMA = "img_id string, out_w int, out_h int, bytes binary"

@@ -26,6 +26,7 @@ from pyspark.sql.types import (
 )
 
 from shaclapi_spark import audio_codec
+from shaclapi_spark.pipeline import headers
 
 AUDIO_META_SCHEMA = StructType(
     [
@@ -115,8 +116,8 @@ def byte_histogram_counts(
     """Exact per-row byte-value histogram counts (long rows: one per (id,
     bin), all bins emitted incl. zeros). Same plumbing as
     :func:`byte_histogram_features` but integer-exact, so a DuckDB oracle can
-    recompute it from hex(bytes) — full value-hash correctness check instead
-    of rows-only."""
+    recompute it from the blob's hex digits — full value-hash correctness
+    check instead of rows-only."""
     assert 256 % n_bins == 0
     shift = 256 // n_bins
 
@@ -617,8 +618,8 @@ def decode_image(blob: bytes) -> "np.ndarray":
     (P6) decode natively (pure numpy — pipeline.imagery.decode_image);
     OTHER container magics fall through to a Pillow path (gated in this
     sandbox — library absent). A blob that IS a BMP/PPM container but a
-    variant the native layer rejects does NOT fall through: image_meta /
-    image_ok_sql classify it 'unsupported', and a fallback decode here
+    variant the native layer rejects does NOT fall through: image_meta and
+    the image suite classify it 'unsupported', and a fallback decode here
     would break the meta↔decode agreement the validation layer pins.
     Pillow's own failures are re-raised as ValueError (the module's
     corrupt-input contract), never as PIL exception types."""
@@ -817,30 +818,16 @@ def container_kind(
     routing first scans each blob's header once instead of once per
     modality).
 
-    JVM built-ins only (hex prefix compares — whole-stage codegen, no
-    UDF, bytes never leave the scan); magic sniffing is deliberately
+    JVM built-ins only (``headers.kind_stages``: magic compares on the
+    64-byte header prefix — whole-stage codegen, no UDF, bytes never
+    leave the scan); magic sniffing is deliberately
     shallow — structural validity is the per-modality metadata op's job
     (audio_analysis.container_stats, imagery.image_meta/video_meta)."""
-    h = F.upper(F.hex(F.col(bytes_col)))
-    kind = (
-        F.when(F.col(bytes_col).isNull(), F.lit("null"))
-        .when(F.substring(h, 1, 8) == "53474131", F.lit("sga1"))
-        .when(
-            (F.substring(h, 1, 8) == "52494646")
-            & (F.substring(h, 17, 8) == "57415645"),
-            F.lit("wav"),
-        )
-        .when(F.substring(h, 1, 8) == "53475631", F.lit("sgv1"))
-        .when(F.substring(h, 1, 4) == "424D", F.lit("bmp"))
-        .when(F.substring(h, 1, 4) == "5036", F.lit("ppm"))
-        .otherwise(F.lit("unknown"))
-    )
-    return df.select(
+    m = headers.project(df, headers.kind_stages(bytes_col))
+    return m.select(
         F.col(id_col).alias("id"),
-        kind.alias("kind"),
-        F.coalesce(F.length(F.col(bytes_col)).cast("long"), F.lit(0)).alias(
-            "n_bytes"
-        ),
+        F.col("__kind").alias("kind"),
+        F.coalesce(F.col("__blen"), F.lit(0).cast("long")).alias("n_bytes"),
     )
 
 

@@ -162,6 +162,12 @@ def local_name(term: str) -> str:
     return t
 
 
+#: prefixed name (CURIE). The local part follows SPARQL's PN_LOCAL shape —
+#: it may contain '.' but not end with one — so the '.' closing a triple
+#: (``?x a ex:Widget.``) is never swallowed into the class name
+_PNAME = r"[\w.\-]*:[\w\-]+(?:\.[\w\-]+)*"
+
+
 # ---------------------------------------------------------------------------
 # intermediate representation
 # ---------------------------------------------------------------------------
@@ -204,7 +210,7 @@ class ShaclShape:
             return None
         m = re.fullmatch(
             r"\s*SELECT\s+\?(\w+)\s+WHERE\s*\{\s*\?(\w+)\s+a\s+"
-            r"(<[^>]*>|[\w.\-]*:[\w.\-]+)\s*\.?\s*\}\s*",
+            rf"(<[^>]*>|{_PNAME})\s*\.?\s*\}}\s*",
             self.target_query,
             re.IGNORECASE,
         )
@@ -214,9 +220,9 @@ class ShaclShape:
 
 
 _TRIPLE_RE = re.compile(
-    r"(\?\w+|<[^>]*>|[\w.\-]*:[\w.\-]+)\s+"            # subject
-    r"(a|\^?<[^>]*>|\^?[\w.\-]*:[\w.\-]+)\s+"          # predicate (^ = inverse)
-    r"(\?\w+|<[^>]*>|[\w.\-]*:[\w.\-]+|'[^']*'|\"[^\"]*\"|[+-]?\d+(?:\.\d+)?)"  # object
+    rf"(\?\w+|<[^>]*>|{_PNAME})\s+"            # subject
+    rf"(a|\^?<[^>]*>|\^?{_PNAME})\s+"          # predicate (^ = inverse)
+    rf"(\?\w+|<[^>]*>|{_PNAME}|'[^']*'|\"[^\"]*\"|[+-]?\d+(?:\.\d+)?)"  # object
 )
 _FILTER_RE = re.compile(r"FILTER\s*\(\s*(\?\w+)\s*(=|!=|<=|>=|<|>)\s*"
                         r"('[^']*'|\"[^\"]*\"|[+-]?\d+(?:\.\d+)?|\?\w+)\s*\)",
@@ -297,8 +303,10 @@ def star_target_filter(query: str, binding: "ShapeBinding") -> str | None:
             elif tok.startswith(("'", '"')) and tok.endswith(tok[0]) and len(tok) >= 2:
                 terms.append(_sql_str(tok[1:-1]))
             elif re.fullmatch(r"[+-]?\d+(?:\.\d+)?", tok):
-                terms.append(tok)  # numeric ids pass through unquoted
-            elif re.fullmatch(r"[\w.\-]*:[\w.\-]+", tok):
+                # quoted like every other entry: a bare number in the IN
+                # list would make Spark cast a string entity column
+                terms.append(_sql_str(tok))
+            elif re.fullmatch(_PNAME, tok):
                 terms.append(_sql_str(local_name(tok)))
             else:
                 raise ValueError(

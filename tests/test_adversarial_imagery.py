@@ -249,13 +249,19 @@ def test_review_hostile_cases_meta_and_sql(spark):
     # top-down: decodable, and the reported height is the magnitude
     assert meta["topdown"]["status"] == "ok"
     assert meta["topdown"]["height"] == 6
-    # the engine-constraint SQL agrees with decode_image on every row
-    ok = {
-        r["img_id"]: r["ok"]
-        for r in df.select(
-            "img_id", SF.expr(im.image_ok_sql("bytes")).alias("ok")
-        ).collect()
+    # the image suite's derived columns (the engine-constraint path,
+    # applied in order as the engine does) agree with decode_image on
+    # every row
+    from shaclapi_spark import fixtures
+
+    dm = df.withColumn("meta_w", SF.lit(8)).withColumn("meta_h", SF.lit(6))
+    for name, sql in fixtures.image_shape().derived_columns.items():
+        dm = dm.withColumn(name, SF.expr(sql))
+    derived = {
+        r["img_id"]: r
+        for r in dm.select("img_id", "__img_ok", "__img_dims_ok").collect()
     }
+    ok = {k: r["__img_ok"] for k, r in derived.items()}
     for k, blob in cases.items():
         try:
             im.decode_image(blob)
@@ -263,12 +269,6 @@ def test_review_hostile_cases_meta_and_sql(spark):
         except ValueError:
             decodable = False
         assert ok[k] == decodable, (k, ok[k], decodable)
-    # dims-match SQL honors the top-down magnitude
-    dm = df.withColumn("meta_w", SF.lit(8)).withColumn("meta_h", SF.lit(6))
-    match = {
-        r["img_id"]: r["m"]
-        for r in dm.select(
-            "img_id", SF.expr(im.image_dims_match_sql("bytes")).alias("m")
-        ).collect()
-    }
+    # dims match honors the top-down magnitude
+    match = {k: r["__img_dims_ok"] for k, r in derived.items()}
     assert match["topdown"] is True and match["good"] is True

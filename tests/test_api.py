@@ -74,6 +74,19 @@ def test_metrics_recorder_ring_buffer():
     assert rec.trace[-1][1] == 12
 
 
+def test_mark_first_exactly_once_across_ring_eviction():
+    """mark_first stays exactly-once after the ring buffer has evicted
+    its row: a later call must not record the stage a second time."""
+    rec = MetricsRecorder(run_id="svc", max_rows=3)
+    rec.mark_first("first_verdict_sec", since_ts=0.0, n_rows=1)
+    for i in range(5):
+        rec.record(f"s{i}", 0.1)
+    assert all(r[1] != "first_verdict_sec" for r in rec.rows)  # evicted
+    rec.mark_first("first_verdict_sec", since_ts=0.0, n_rows=1)
+    assert all(r[1] != "first_verdict_sec" for r in rec.rows)
+    assert len(rec.rows) == 3
+
+
 def test_run_anytime_mode(spark, fixture_tables, tmp_path):
     from shaclapi_spark import api, fixtures
     from shaclapi_spark.lineage import LineageRun

@@ -203,7 +203,7 @@ def test_video_frame_stats_exact(spark, av_tables):
 def test_image_ops_plan_shape(spark, av_tables):
     # metadata op must stay UDF-free (pure projection over the scan);
     # stats ops must be a single Arrow pass with no shuffle
-    images, _ = av_tables
+    images, videos = av_tables
     meta_plan = im.image_meta(images)._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in meta_plan and "BatchEvalPython" not in meta_plan
     assert "Exchange" not in meta_plan
@@ -211,6 +211,29 @@ def test_image_ops_plan_shape(spark, av_tables):
         im.image_pixel_stats(images)._jdf.queryExecution().executedPlan().toString()
     )
     assert "MapInPandas" in stats_plan and "Exchange" not in stats_plan
+
+    # every header consumer compiles under whole-stage codegen: with the
+    # interpreted fallback off, a projection past the JVM's 64 KB method
+    # limit raises instead of silently running interpreted
+    from shaclapi_spark import fixtures
+    from shaclapi_spark.engine import run_suite
+    from shaclapi_spark.pipeline import audio_analysis as aa
+
+    clips = spark.read.parquet(fixture_io.ensure_fixture_pandas(2000)["clips"])
+    prev = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        # collect, not count: count() would prune the parsed columns away
+        assert len(im.image_meta(images).collect()) == 500
+        assert len(im.video_meta(videos).collect()) == 250
+        assert len(aa.container_stats(clips).collect()) == clips.count()
+        assert len(mm.container_kind(images, "img_id").collect()) == 500
+        tables = {"images": images, "videos": videos}
+        for suite in (fixtures.image_suite(), fixtures.video_suite()):
+            res = run_suite(spark, suite, tables)
+            assert res.verdicts.count() > 0 and res.violations.count() > 0
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", prev)
 
 
 # ---------------------------------------------------------------------------

@@ -30,7 +30,7 @@ def test_native_container_variants_never_fall_through_to_pillow():
     """A BMP/PPM blob the native decoder rejects (unsupported variant /
     truncated) must raise ValueError from multimodal.decode_image in ANY
     environment — falling through to Pillow would decode rows the
-    validation layer (image_meta/image_ok_sql) classifies 'unsupported',
+    validation layer (image_meta / the image suite) classifies 'unsupported',
     breaking the meta-vs-decode agreement."""
     import struct
 

@@ -545,12 +545,59 @@ def test_star_query_curie_and_numeric_values_entries():
         "SELECT ?x WHERE { ?x <http://ex/name> ?n . VALUES ?x { ex:e1 7 } }",
         _star_binding(),
     )
-    assert got == "id IN ('e1', 7) AND name IS NOT NULL"
+    assert got == "id IN ('e1', '7') AND name IS NOT NULL"
     with pytest.raises(ValueError, match="unrecognized VALUES entry"):
         star_target_filter(
             "SELECT ?x WHERE { ?x <http://ex/name> ?n . VALUES ?x { ??bad } }",
             _star_binding(),
         )
+
+
+def test_star_query_no_space_before_dot():
+    """The '.' closing a triple is not part of a prefixed name: with no
+    space before it, ``?x a ex:Widget.`` still targets class 'Widget'
+    (a swallowed dot would target 'Widget.' and silently narrow the
+    population). A '.' inside a local name stays part of it."""
+    from shaclapi_spark.shacl import star_target_filter
+
+    b = _star_binding()
+    assert star_target_filter("SELECT ?x WHERE { ?x a ex:Widget. }", b) == (
+        "cls = 'Widget'"
+    )
+    assert star_target_filter(
+        "SELECT ?x WHERE { ?x a ex:Widget.?x ex:status ex:v1.2. }", b
+    ) == "cls = 'Widget' AND status = 'v1.2'"
+    assert star_target_filter(
+        "SELECT ?x WHERE { ?x ex:name ?n . VALUES ?x { ex:e1 ex:e.2 } }", b
+    ) == "id IN ('e1', 'e.2') AND name IS NOT NULL"
+    with pytest.raises(ValueError, match="unrecognized VALUES entry"):
+        star_target_filter("SELECT ?x WHERE { VALUES ?x { ex:e1. } }", b)
+
+
+def test_class_target_query_no_space_before_dot():
+    shapes = parse_shacl(
+        """@prefix : <http://example.org/> .
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+:S a sh:NodeShape ;
+  sh:targetQuery "SELECT ?x WHERE { ?x a :Widget. }" ;
+  sh:property [ sh:path :name ; sh:minCount 1 ] ."""
+    )
+    assert shapes[0].query_target_class() == "Widget"
+    suite = to_suite(shapes, {"S": _star_binding()})
+    assert suite.shape("S").target_filter == "cls = 'Widget'"
+
+
+def test_numeric_values_entry_matches_string_ids_exactly(spark):
+    """A numeric VALUES entry is compared as a string: a string entity
+    column is never cast to a number ('07' must not match 7, and 'e1'
+    must not fail a numeric cast)."""
+    from shaclapi_spark.shacl import star_target_filter
+
+    where = star_target_filter(
+        "SELECT ?x WHERE { VALUES ?x { ex:e1 7 } }", _star_binding()
+    )
+    df = spark.createDataFrame([("e1",), ("7",), ("07",), ("e2",)], "id string")
+    assert {r.id for r in df.filter(where).collect()} == {"e1", "7"}
 
 
 def test_star_query_solution_modifiers_raise():
