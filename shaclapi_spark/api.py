@@ -103,7 +103,8 @@ def validation_summary(
 ) -> dict:
     """POST /validation analog: {shape: {valid: n, invalid: n}} plus the
     verdict DataFrame for callers that want rows (api.py:372-387 drains the
-    queue into exactly this structure)."""
+    queue into exactly this structure). ``result`` is the run's
+    SuiteResult: release it once the rows are consumed."""
     res = run_suite(
         spark, suite, tables, target_shapes=target_shapes, config=config
     )
@@ -122,6 +123,7 @@ def validation_summary(
         },
         "verdicts": res.verdicts,
         "violations": res.violations,
+        "result": res,
     }
 
 
@@ -208,9 +210,11 @@ def enforce(
     )
     table = tables[shape.table]
     # both derived relations are bounded by the invalid-entity count and
-    # are eagerly checkpointed, so validation runs exactly twice HERE
-    # (once per result relation) and never again — without this, every
-    # action on clean/quarantine re-evaluates the whole suite
+    # are eagerly checkpointed: validation runs once HERE (the first
+    # checkpoint fills the run's persisted entity frames, the second reads
+    # them; a cyclic target re-derives its violations from the last
+    # fixpoint round), the run's caches are then released, and no action
+    # on clean/quarantine re-evaluates the suite
     bad = (
         res.verdicts.filter(
             (F.col("shape") == shape_name)
@@ -237,6 +241,7 @@ def enforce(
         )
         .localCheckpoint(eager=True)
     )
+    res.release()
     quarantine = (
         table.join(bad, key == bad["entity_id"])
         .drop(bad["entity_id"])

@@ -10,7 +10,8 @@ Per-shape physical shape (SURVEY.md §7, scale-first):
         ──left join per (child_table, fk): child groupBy(fk) computing ALL
           count / qualified-valid-count columns for that child in one pass
         ──AND/OR combine + reason attribution (map-side)
-        ──verdicts / violations
+        ──persisted ONCE per run (entity id, verdict, reason, bools, counts)
+        ──verdicts / violations / dependent shapes read that one frame
 
 Shapes that declare no `unique` constraint are treated as entity-grain and
 skip the groupBy entirely (zero-shuffle fast path — e.g. TranscriptShape).
@@ -24,6 +25,7 @@ order-insensitive hash aggregate instead of a full diff.
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from typing import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
@@ -49,7 +51,6 @@ class EngineConfig:
     n_buckets: int = 64
     short_circuit: bool = True          # early-fail: skip audio decode for rows already invalid
     max_fixpoint_iters: int = 10
-    cache_shared_verdicts: bool = True  # persist verdicts reused by dependent shapes
     min_snr_db: float = 30.0
     # fk_match equality via xxhash64 of both sides: the parent agg and the
     # child-side join then shuffle fixed 8-byte hashes instead of raw payload
@@ -61,11 +62,31 @@ class EngineConfig:
 
 @dataclass
 class SuiteResult:
+    """One run's verdicts, violations and summary. The run persisted the
+    entity-grain frame of every acyclic shape (and every restricted
+    population); the result owns those caches until :meth:`release`, which
+    is also called on leaving a ``with`` block."""
+
     verdicts: DataFrame
     violations: DataFrame
     summary: DataFrame
     shapes_evaluated: list[str] = field(default_factory=list)
     verdicts_by_shape: dict[str, DataFrame] = field(default_factory=dict)
+    _cached: list[DataFrame] = field(default_factory=list, repr=False)
+
+    def release(self) -> None:
+        """Unpersist every frame this run persisted. Result frames stay
+        usable: their next action recomputes from the sources.
+        ``localCheckpoint`` data (cyclic fixpoints) is not touched."""
+        for df in self._cached:
+            df.unpersist()
+        self._cached.clear()
+
+    def __enter__(self) -> "SuiteResult":
+        return self
+
+    def __exit__(self, *exc) -> None:
+        self.release()
 
 
 def _bool_col(name: str) -> Column:
@@ -600,7 +621,15 @@ class _ShapeEvaluator:
         (the referenced shape's table is the child table)."""
         return self._ref_entity_cols[ref_shape]
 
-    def evaluate(self) -> tuple[DataFrame, DataFrame]:
+    def evaluate(
+        self, hold: Callable[[DataFrame], DataFrame] | None = None
+    ) -> tuple[DataFrame, DataFrame]:
+        """(verdicts, violations), both projections of ONE entity-grain
+        frame: entity id, verdict, reason, each top-level constraint's bool
+        and the counts its violation detail prints — no payload. ``hold``
+        (run_suite's persist) is applied to that frame, so both outputs and
+        the qualified_shape joins of dependent shapes read it instead of
+        re-running the shape's plan."""
         ent, bools = self.entity_bools()
 
         # top-level combine honoring or_groups, in declaration order
@@ -627,7 +656,24 @@ class _ShapeEvaluator:
             )
             reason = F.when(~col, F.lit(rsn)).otherwise(reason)
 
-        ent = ent.withColumn("__valid", valid).withColumn("__reason", reason)
+        # the frame keeps each top-level verdict and the counts the
+        # violation details print: booleans and integers, never NULL (the
+        # columnar cache stores NULLs as 4-byte positions)
+        counted_kinds = ("min_count", "max_count", "qualified_shape")
+        counted = [c for c, _ in top if c.kind in counted_kinds]
+        ent = ent.select(
+            "entity_id",
+            valid.alias("__valid"),
+            reason.alias("__reason"),
+            *[col.alias(f"__ok{i}") for i, (_, col) in enumerate(top)],
+            *[
+                F.coalesce(F.col(f"cnt_{c.id}"), F.lit(0)).alias(f"cnt_{c.id}")
+                for c in counted
+            ],
+            *(["__n_rows"] if any(c.kind == "unique" for c, _ in top) else []),
+        )
+        if hold is not None:
+            ent = hold(ent)
 
         verdicts = ent.select(
             F.col("entity_id").cast("string").alias("entity_id"),
@@ -637,13 +683,11 @@ class _ShapeEvaluator:
         )
 
         viol_structs = []
-        for c, col in top:
+        for i, (c, _) in enumerate(top):
             detail = F.lit(describe(c))
-            if c.kind in ("min_count", "max_count", "qualified_shape"):
+            if c.kind in counted_kinds:
                 detail = F.format_string(
-                    "%s [count=%d]",
-                    detail,
-                    F.coalesce(F.col(f"cnt_{c.id}"), F.lit(0)),
+                    "%s [count=%d]", detail, F.col(f"cnt_{c.id}")
                 )
             elif c.kind == "unique":
                 detail = F.format_string(
@@ -651,7 +695,7 @@ class _ShapeEvaluator:
                 )
             viol_structs.append(
                 F.when(
-                    ~col,
+                    ~F.col(f"__ok{i}"),
                     F.struct(
                         F.lit(c.id).alias("constraint_id"),
                         detail.alias("detail"),
@@ -765,12 +809,23 @@ def run_suite(
     shape_by_name = {s.name: s for s in reduced.shapes}
     entity_col_by_shape = {s.name: s.entity_col for s in reduced.shapes}
 
+    # every frame this run persists; the SuiteResult owns and releases them
+    cached: list[DataFrame] = []
+
+    def hold(df: DataFrame) -> DataFrame:
+        df = df.persist()
+        cached.append(df)
+        return df
+
     pop_by_shape: dict[str, DataFrame] = {}
     target_pops: dict[str, DataFrame] = {}
     if target_population is not None:
         pop_by_shape, target_pops = _propagate_population(
             reduced, groups, targets, target_population, tables
         )
+        # each population feeds 2-3 consumers (entity semi-join, child-agg
+        # pushdown, downstream propagation)
+        pop_by_shape = {n: hold(df) for n, df in pop_by_shape.items()}
 
     verdicts_by_shape: dict[str, DataFrame] = dict(preseeded_verdicts or {})
     violations_by_shape: dict[str, DataFrame] = {}
@@ -779,6 +834,7 @@ def run_suite(
         name: str,
         prereq: dict[str, DataFrame],
         population: DataFrame | None = None,
+        hold: Callable[[DataFrame], DataFrame] | None = None,
     ):
         ev = _ShapeEvaluator(
             spark,
@@ -791,16 +847,17 @@ def run_suite(
                 population if population is not None else pop_by_shape.get(name)
             ),
         )
-        return ev.evaluate()
+        return ev.evaluate(hold)
 
     for group in groups:
         if all(n in verdicts_by_shape for n in group.shapes):
             continue  # preseeded by an earlier run
         if not group.cyclic:
+            # a shape's result is computed once per run: its entity-grain
+            # frame is persisted, and verdicts, violations, summary and the
+            # qualified_shape joins of dependent shapes all read it
             name = group.shapes[0]
-            vd, vl = eval_one(name, verdicts_by_shape)
-            if cfg.cache_shared_verdicts and _is_referenced(reduced, name):
-                vd = vd.persist()
+            vd, vl = eval_one(name, verdicts_by_shape, hold=hold)
             verdicts_by_shape[name] = vd
             violations_by_shape[name] = vl
         else:
@@ -947,6 +1004,7 @@ def run_suite(
         summary=summary,
         shapes_evaluated=keep,
         verdicts_by_shape=dict(verdicts_by_shape),
+        _cached=cached,
     )
 
 
@@ -964,9 +1022,7 @@ def _propagate_population(
     referenced shapes get exactly the child entities reachable from a
     restricted parent through each qualified_shape's (child, fk) link —
     the semi-join-pushdown analog of the reference's per-shape query
-    extension (ref shaclapi/config.py:326-331). Populations are persisted:
-    each feeds 2-3 consumers (entity semi-join, child-agg pushdown,
-    downstream propagation)."""
+    extension (ref shaclapi/config.py:326-331)."""
     shape_by_name = {s.name: s for s in reduced.shapes}
     entity_col_by_shape = {s.name: s.entity_col for s in reduced.shapes}
 
@@ -1047,11 +1103,7 @@ def _propagate_population(
                     )
     for n in unrestricted:
         pops.pop(n, None)
-    return {n: df.persist() for n, df in pops.items()}, target_pops
-
-
-def _is_referenced(suite: Suite, name: str) -> bool:
-    return any(name in s.shape_refs() for s in suite.shapes)
+    return pops, target_pops
 
 
 def _check_unique_ids(suite: Suite) -> None:

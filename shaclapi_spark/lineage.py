@@ -106,73 +106,79 @@ def run_with_lineage(
                 f"{g.shapes}; incremental waves require an acyclic target"
             )
 
-    # helper-shape verdicts: computed ONCE, cached, reused by every wave
+    # helper-shape verdicts: computed ONCE (the helper run persists them),
+    # reused by every wave, released when the last wave is written
     helper_names = [n for n in wave_suite.names() if n != target_shape]
+    helper_res = None
     preseeded = {}
     if helper_names:
         helper_res = run_suite(
             spark, wave_suite, tables, target_shapes=helper_names, config=cfg
         )
         preseeded = {
-            n: df.persist()
+            n: df
             for n, df in helper_res.verdicts_by_shape.items()
             if n != target_shape
         }
 
     rec = MetricsRecorder(run_id=f"lineage-{target_shape}-{int(t0)}")
     ran: list[int] = []
-    for wave in range(n_waves):
-        if wave in done:
-            continue
-        # bucket filter is a pure function of the entity id → pushed into the
-        # scan; all non-target rows are dropped before any shuffle
-        wave_pred = (
-            F.pmod(F.xxhash64(F.col(entity)), F.lit(n_waves)).cast("int") == wave
-        )
-        wave_tables = dict(tables)
-        wave_tables[shape.table] = tables[shape.table].filter(wave_pred)
-        with rec.stage(f"wave_{wave}") as h:
-            res = run_suite(
+    try:
+        for wave in range(n_waves):
+            if wave in done:
+                continue
+            # bucket filter is a pure function of the entity id → pushed into the
+            # scan; all non-target rows are dropped before any shuffle
+            wave_pred = (
+                F.pmod(F.xxhash64(F.col(entity)), F.lit(n_waves)).cast("int") == wave
+            )
+            wave_tables = dict(tables)
+            wave_tables[shape.table] = tables[shape.table].filter(wave_pred)
+            # the wave's run is released after its three writes
+            with rec.stage(f"wave_{wave}") as h, run_suite(
                 spark,
                 wave_suite,
                 wave_tables,
                 target_shapes=[target_shape],
                 config=cfg,
                 preseeded_verdicts=preseeded,
-            )
-            # row count piggybacks on the write job via the Observation API —
-            # no extra count job, no re-read of the just-written parquet
-            obs = Observation(f"lineage_wave_{wave}")
-            res.verdicts.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-                "overwrite"
-            ).parquet(os.path.join(out_dir, "verdicts", f"wave={wave}"))
-            res.violations.write.mode("overwrite").parquet(
-                os.path.join(out_dir, "violations", f"wave={wave}")
-            )
-            res.summary.write.mode("overwrite").parquet(
-                os.path.join(out_dir, "summary", f"wave={wave}")
-            )
-            n_rows = int(obs.get["n"])
-            h.record_rows(n_rows)
-        # first-emission latency: how long until the FIRST verdict wave was
-        # durably available to a consumer (anytime-delivery metric, the
-        # analog of the reference's first-result timestamp)
-        rec.mark_first("first_verdict_sec", since_ts=t0, n_rows=n_rows)
-        # per-answer trace row (cumulative verdicts delivered vs offset)
-        rec.mark_emission(since_ts=t0, n_rows=n_rows)
-        with open(_manifest_path(out_dir), "a") as fh:
-            fh.write(
-                json.dumps(
-                    {
-                        "wave": wave,
-                        "status": "done",
-                        "ts": time.time(),
-                        "target_shape": target_shape,
-                    }
+            ) as res:
+                # row count piggybacks on the write job via the Observation API —
+                # no extra count job, no re-read of the just-written parquet
+                obs = Observation(f"lineage_wave_{wave}")
+                res.verdicts.observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+                    "overwrite"
+                ).parquet(os.path.join(out_dir, "verdicts", f"wave={wave}"))
+                res.violations.write.mode("overwrite").parquet(
+                    os.path.join(out_dir, "violations", f"wave={wave}")
                 )
-                + "\n"
-            )
-        ran.append(wave)
+                res.summary.write.mode("overwrite").parquet(
+                    os.path.join(out_dir, "summary", f"wave={wave}")
+                )
+                n_rows = int(obs.get["n"])
+                h.record_rows(n_rows)
+            # first-emission latency: how long until the FIRST verdict wave was
+            # durably available to a consumer (anytime-delivery metric, the
+            # analog of the reference's first-result timestamp)
+            rec.mark_first("first_verdict_sec", since_ts=t0, n_rows=n_rows)
+            # per-answer trace row (cumulative verdicts delivered vs offset)
+            rec.mark_emission(since_ts=t0, n_rows=n_rows)
+            with open(_manifest_path(out_dir), "a") as fh:
+                fh.write(
+                    json.dumps(
+                        {
+                            "wave": wave,
+                            "status": "done",
+                            "ts": time.time(),
+                            "target_shape": target_shape,
+                        }
+                    )
+                    + "\n"
+                )
+            ran.append(wave)
+    finally:
+        if helper_res is not None:
+            helper_res.release()
     if rec.rows:
         rec.append_parquet(spark, os.path.join(out_dir, "metrics"))
     if rec.trace:

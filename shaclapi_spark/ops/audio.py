@@ -6,13 +6,14 @@ Implements the BASELINE per-row invariant: decoded PCM must match the
 reference signal at SNR ≥ 30 dB. The precondition column enables the
 reference's early-fail short-circuit (ValidationResultStreaming.py:18-21
 analog): rows already invalidated by cheap row checks skip the expensive
-decode — the UDF receives the precondition *as data*, so skipping is
-guaranteed (a ``F.when`` around a UDF would not guarantee non-evaluation).
+decode. The precondition gates the UDF's *argument*
+(``F.when(pre, bytes)``), so a skipped row's blob never crosses the Arrow
+boundary — it arrives as None (a ``F.when`` around the UDF *call* would
+not guarantee non-evaluation).
 """
 
 from __future__ import annotations
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
@@ -22,13 +23,10 @@ from shaclapi_spark import audio_codec
 
 
 @pandas_udf(DoubleType())
-def _snr_db_udf(blobs: pd.Series, precond: pd.Series) -> pd.Series:
-    vals = blobs.to_numpy(dtype=object)
-    mask = precond.fillna(False).to_numpy(dtype=bool)
+def _snr_db_udf(blobs: pd.Series) -> pd.Series:
     # batch-vectorized: one np.sin + reduceat over the concatenated batch
-    # (audio_codec.snr_db_batch); skipped rows enter as None → NaN
-    gated = np.where(mask, vals, None)
-    return pd.Series(audio_codec.snr_db_batch(list(gated)))
+    # (audio_codec.snr_db_batch); skipped and NULL blobs enter as None → NaN
+    return pd.Series(audio_codec.snr_db_batch(list(blobs.to_numpy(dtype=object))))
 
 
 def snr_column(bytes_col: str, precondition: Column | None = None) -> Column:
@@ -37,8 +35,11 @@ def snr_column(bytes_col: str, precondition: Column | None = None) -> Column:
     NaN where the precondition is false (skipped) or the blob is NULL;
     -inf where decode fails.
     """
-    pre = precondition if precondition is not None else F.lit(True)
-    return _snr_db_udf(F.col(bytes_col), pre)
+    blob = F.col(bytes_col)
+    if precondition is not None:
+        # NULL precondition skips too, as in the row-check coalescing
+        blob = F.when(precondition, blob)
+    return _snr_db_udf(blob)
 
 
 def with_audio_check(

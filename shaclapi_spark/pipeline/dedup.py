@@ -303,16 +303,29 @@ def lsh_candidate_pairs(
             )
         ).alias("bk"),
     ).select("doc", "bk.band", "bk.bhash")
-    if max_bucket is not None:
-        bands = drop_hot_groups(bands, ["band", "bhash"], max_bucket)
-    a = bands.select(F.col("doc").alias("a"), "band", "bhash")
-    b = bands.select(F.col("doc").alias("b"), "band", "bhash")
-    return (
-        a.join(b, ["band", "bhash"])
-        .filter(F.col("a") < F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
+
+    def pairs(bands: DataFrame) -> DataFrame:
+        a = bands.select(F.col("doc").alias("a"), "band", "bhash")
+        b = bands.select(F.col("doc").alias("b"), "band", "bhash")
+        return (
+            a.join(b, ["band", "bhash"])
+            .filter(F.col("a") < F.col("b"))
+            .select("a", "b")
+            .distinct()
+        )
+
+    if max_bucket is None:
+        return pairs(bands)
+    # the capped path reads `bands` three times (hot-bucket agg + both join
+    # sides) — persist so the signature explode runs once, materialize the
+    # pairs, then release it
+    bands = bands.persist()
+    try:
+        return pairs(
+            drop_hot_groups(bands, ["band", "bhash"], max_bucket)
+        ).localCheckpoint(eager=True)
+    finally:
+        bands.unpersist()
 
 
 def minhash_lsh_neardups(

@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import json
 import traceback
+from contextlib import ExitStack
 from typing import Callable
 from urllib.parse import parse_qs
 
@@ -165,15 +166,22 @@ def make_app(
         )
         return [body]
 
+    # every validating route releases its run's cached frames once the
+    # response is serialized (or the request failed): a long-running
+    # service must not pin one request's verdicts for the process lifetime
     def route_multiprocessing(form: dict[str, str]):
-        with rec.stage("multiprocessing.total_execution_time") as total:
+        with rec.stage(
+            "multiprocessing.total_execution_time"
+        ) as total, ExitStack() as held:
             with rec.stage("multiprocessing.load_time"):
                 suite = _load_suite(form)
                 tables = _load_tables(spark, form)
                 limit = int(form.get("limit", "1000"))
             with rec.stage("multiprocessing.validation_time") as vt:
-                res = api.run(
-                    spark, suite, tables, target_shapes=_target_shapes(form)
+                res = held.enter_context(
+                    api.run(
+                        spark, suite, tables, target_shapes=_target_shapes(form)
+                    )
                 )
                 counts = {
                     r["shape"]: {
@@ -203,7 +211,9 @@ def make_app(
         return out
 
     def route_validation(form: dict[str, str]):
-        with rec.stage("validation.total_execution_time") as total:
+        with rec.stage(
+            "validation.total_execution_time"
+        ) as total, ExitStack() as held:
             with rec.stage("validation.load_time"):
                 suite = _load_suite(form)
                 tables = _load_tables(spark, form)
@@ -212,6 +222,7 @@ def make_app(
                 out = api.validation_summary(
                     spark, suite, tables, target_shapes=_target_shapes(form)
                 )
+                held.enter_context(out["result"])
                 n_total = sum(
                     c["valid"] + c["invalid"] for c in out["shapes"].values()
                 )

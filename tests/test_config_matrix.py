@@ -22,13 +22,10 @@ def baseline_sets(spark, fixture_tables):
 
 
 @pytest.mark.parametrize("short_circuit", [True, False])
-@pytest.mark.parametrize("cache_shared", [True, False])
 def test_perf_flags_do_not_change_verdicts(
-    spark, fixture_tables, baseline_sets, short_circuit, cache_shared
+    spark, fixture_tables, baseline_sets, short_circuit
 ):
-    cfg = EngineConfig(
-        short_circuit=short_circuit, cache_shared_verdicts=cache_shared
-    )
+    cfg = EngineConfig(short_circuit=short_circuit)
     res = run_suite(
         spark,
         fixtures.clip_suite(include_audio=True, include_drift=False),

@@ -94,3 +94,72 @@ def test_empty_target_population(spark, fixture_tables):
     suite.shape("ClipShape").target_filter = "codec = 'nonexistent'"
     res = engine.run_suite(spark, suite, fixture_tables, target_shapes=["ClipShape"])
     assert res.verdicts.filter(F.col("shape") == "ClipShape").count() == 0
+
+
+def _plan_nodes(node):
+    """Physical operators of an executed plan, through AQE wrappers and
+    query stages, but not into a cached relation: an InMemoryTableScan is
+    a leaf here (its InMemoryRelation is an inner child, not a child)."""
+    yield node
+    cls = node.getClass().getSimpleName()
+    if cls == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(node.executedPlan())
+        return
+    if cls.endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan())
+        return
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_violations_read_the_persisted_entity_frame(spark, fixture_tables):
+    """A shape is evaluated once per run: after the verdicts ran, the
+    violations read the persisted entity-grain frames — no audio UDF and no
+    clips scan outside a cached relation."""
+    res = engine.run_suite(
+        spark, fixtures.clip_suite(include_drift=False), fixture_tables
+    )
+    res.verdicts.groupBy("shape", "is_valid").count().collect()
+    qe = res.violations._jdf.queryExecution()
+    qe.toRdd().count()
+    nodes = list(_plan_nodes(qe.executedPlan()))
+    names = [n.nodeName() for n in nodes]
+    assert "InMemoryTableScan" in names
+    assert "ArrowEvalPython" not in names
+    clip_scans = [
+        n
+        for n in nodes
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+        and "clips.parquet" in n.relation().location().rootPaths().toString()
+    ]
+    assert clip_scans == []
+    res.release()
+
+
+def test_release_unpersists_and_results_recompute(spark, fixture_tables):
+    """release() drops every frame the run persisted (entity frames and the
+    restricted populations); the released result still answers, without
+    caching again. Checked on RDD ids: the shared session's cleaner may
+    drop other tests' caches meanwhile."""
+    jsc = spark.sparkContext._jsc
+
+    def ids():
+        return set(jsc.getPersistentRDDs().keySet())
+
+    before = ids()
+    res = engine.run_suite(
+        spark,
+        fixtures.clip_suite(include_drift=False),
+        fixture_tables,
+        target_shapes=["ClipShape"],
+        target_population="codec <> 'flac'",
+    )
+    counts = res.verdicts.groupBy("shape", "is_valid").count().collect()
+    held = ids() - before
+    assert held
+    res.release()
+    assert ids() & held == set()
+    again = res.verdicts.groupBy("shape", "is_valid").count().collect()
+    assert sorted(again) == sorted(counts)
+    assert ids() - before == set()

@@ -3,7 +3,9 @@
 library API, form-encoded in, JSON out, bounded row serialization."""
 
 import http.client
+import io
 import json
+import shutil
 import threading
 from urllib.parse import urlencode
 
@@ -204,3 +206,38 @@ def test_reduce_route_reports_reduction_audit(server):
     assert "ClipShape" in out["pruned_shapes"]
     assert out["constraints"]["TranscriptShape"]
     assert out["order"][0]["cyclic"] is False
+
+
+def test_multiprocessing_soak_releases_cached_frames(spark, fixture_dir, tmp_path):
+    """A long-running service must not pin any request's cached frames: 20
+    /multiprocessing requests (clip suite with audio and drift) leave no
+    persisted RDD behind. The tables are private copies, so no other
+    test's cached plan can match these requests'; the check is on RDD ids
+    because the session's cleaner may drop other tests' caches meanwhile."""
+    app = service.make_app(spark)
+    tables = {}
+    for t in ("clips", "transcripts", "ref_histograms"):
+        shutil.copytree(fixture_dir[t], tmp_path / t)
+        tables[t] = f"parquet:{tmp_path / t}"
+    body = urlencode(
+        {
+            "suite": fixtures.clip_suite().to_json(),
+            "tables": json.dumps(tables),
+            "limit": "10",
+        }
+    ).encode()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    for _ in range(20):
+        status = []
+        environ = {
+            "REQUEST_METHOD": "POST",
+            "PATH_INFO": "/multiprocessing",
+            "QUERY_STRING": "",
+            "CONTENT_LENGTH": str(len(body)),
+            "wsgi.input": io.BytesIO(body),
+        }
+        out = json.loads(b"".join(app(environ, lambda s, h: status.append(s))))
+        assert status == ["200 OK"], out
+        assert out["shapes"]["ClipShape"]["invalid"] > 0
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
