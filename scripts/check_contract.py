@@ -21,13 +21,18 @@ from __future__ import annotations
 
 import os
 import re
+import shutil
 import sys
+import threading
 import time
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from perfbench.spark_layers import driver_mem_mb, host_cores, host_mem_mb  # noqa: E402
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.01")
 #: what a whole-stage codegen compile failure looks like in a Spark error
@@ -43,22 +48,70 @@ def norm(df: pd.DataFrame) -> pd.DataFrame:
     return df.sort_values(by=list(df.columns)).reset_index(drop=True)
 
 
+def dir_mb(path: str) -> float:
+    total = 0
+    for e in os.scandir(path):
+        try:
+            total += e.stat().st_size
+        except FileNotFoundError:  # DuckDB dropped the spill file meanwhile
+            pass
+    return total / 2**20
+
+
+def run_oracle(con, sql: str, spill_dir: str, spill_mb: int) -> pd.DataFrame:
+    """One oracle statement, interrupted once its spill passes ``spill_mb``:
+    DuckDB 1.0 spilled the audio oracles past ``max_temp_directory_size``."""
+    done, tripped = threading.Event(), threading.Event()
+
+    def watch():
+        while not done.wait(1.0):
+            if dir_mb(spill_dir) > spill_mb:
+                tripped.set()
+                con.interrupt()
+                return
+
+    watcher = threading.Thread(target=watch, daemon=True)
+    watcher.start()
+    try:
+        return con.execute(sql).fetchdf()
+    except duckdb.Error:
+        if tripped.is_set():
+            raise RuntimeError(f"spill passed {spill_mb} MB") from None
+        raise
+    finally:
+        done.set()
+        watcher.join()
+
+
 def main() -> int:
     from pyspark.sql import SparkSession
 
+    # Spark and DuckDB each get the host's cores and a quarter of its RAM;
+    # DuckDB spills past its limit into .tmp/, up to a quarter of the free
+    # disk, and an oracle that needs more fails instead of filling the host
+    cores, mem_mb = host_cores(), driver_mem_mb(host_mem_mb())
     spark = (
-        SparkSession.builder.master("local[8]")
+        SparkSession.builder.master(f"local[{cores}]")
         .appName("check-contract")
         .config("spark.sql.shuffle.partitions", "16")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "6g")
+        .config("spark.driver.memory", f"{mem_mb}m")
         .config("spark.sql.codegen.fallback", "false")
         .getOrCreate()
     )
     import __spark_entry__ as entry_mod
 
-    con = duckdb.connect()
+    spill_dir = os.path.join(ROOT, ".tmp", "duckdb")
+    os.makedirs(spill_dir, exist_ok=True)
+    spill_mb = shutil.disk_usage(spill_dir).free // 4 >> 20
+    con = duckdb.connect(
+        config={
+            "memory_limit": f"{mem_mb}MB",
+            "threads": cores,
+            "temp_directory": spill_dir,
+        }
+    )
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
@@ -95,7 +148,7 @@ def main() -> int:
             print(f"rows  {name}: {len(sdf)} rows (rows-only, {t1 - t0:.1f}s)")
             continue
         try:
-            odf = con.execute(oracles[name]).fetchdf()
+            odf = run_oracle(con, oracles[name], spill_dir, spill_mb)
         except Exception as e:
             failures.append(name)
             print(f"FAIL  {name}: oracle error {str(e)[:300]}")

@@ -8,7 +8,8 @@ BMP (54), the fixture's fixed-width PPM (19), SGV1 (11), SGA1 (21) and
 the RIFF/WAVE sniff (12).
 
 Every rule is Spark-SQL text over JVM built-ins (substring / hex / conv /
-length — no UDF, no ``decode()``, no throwing CAST), in four stages:
+length / regexp_extract — no UDF, no ``decode()``, no throwing CAST), in
+four stages:
 
     bytes -> header (__hdr, __blen) -> fields -> verdict
 
@@ -19,7 +20,9 @@ either as DataFrame projections (:func:`project` — the metadata ops) or
 as ordered ``Shape.derived_columns`` (:func:`derived` — the validation
 suites), so both read the same rule. Each status rule keeps its
 decoder's rejection order (``imagery.decode_image`` / ``decode_video``,
-``audio_codec.decode_clip``).
+``audio_codec.decode_clip``). PPM is read only in the fixed-width layout:
+another layout is 'unsupported' even where ``decode_image`` reads it, as
+fields at fixed offsets cannot follow a variable-width header.
 """
 
 from __future__ import annotations
@@ -74,22 +77,13 @@ def _le(byte_off: int, n_bytes: int) -> str:
 
 
 def _ascii_int(byte_off: int, n_bytes: int) -> str:
-    """Space-padded ASCII decimal folded byte by byte: acc*10 + digit on
-    '0'..'9', acc unchanged otherwise; NULL when no byte is a digit (no
-    number here, as opposed to a real 0). Pure conv/CASE arithmetic — no
-    decode() (ANSI throws on non-UTF-8 header bytes) and no throwing CAST.
-    The fold is written acc*scale + digit so each step references acc
-    once and the tree stays linear in ``n_bytes``."""
-    acc, any_digit = "CAST(0 AS BIGINT)", []
-    for i in range(n_bytes):
-        d = f"{_le(byte_off + i, 1)} - 48"
-        digit = f"({d}) BETWEEN 0 AND 9"
-        acc = (
-            f"({acc}) * CASE WHEN {digit} THEN 10 ELSE 1 END"
-            f" + CASE WHEN {digit} THEN {d} ELSE 0 END"
-        )
-        any_digit.append(digit)
-    return f"CASE WHEN {' OR '.join(any_digit)} THEN {acc} END"
+    """Space-padded ASCII decimal at 1-based byte ``byte_off``, as BIGINT:
+    one anchored regex over the hex takes space padding (``20``) around
+    one digit run (``3d`` pairs), anything else is NULL. No decode() (ANSI
+    throws on non-UTF-8 bytes), no throwing CAST (<= 18 digits fit)."""
+    field = f"substring(__hdr, {2 * byte_off - 1}, {2 * n_bytes})"
+    digits = f"regexp_extract({field}, '^(?:20)*((?:3[0-9])+)(?:20)*$', 1)"
+    return f"CAST(nullif(regexp_replace({digits}, '3([0-9])', '$1'), '') AS BIGINT)"
 
 
 # --- one field table per format (SQL over __hdr) -----------------------------

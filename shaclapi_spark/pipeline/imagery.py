@@ -284,7 +284,8 @@ def image_meta(
     length, and a ``status`` verdict mirroring ``decode_image``'s
     rejection order (null -> bad_magic -> truncated -> unsupported ->
     truncated -> ok). PPM parsing assumes the fixture's fixed-width
-    19-byte header (module docstring); BMP parsing is the real spec.
+    19-byte header (module docstring) and classifies any other PPM layout
+    'unsupported'; BMP parsing is the real spec.
 
     Scale shape: one scan, zero shuffle, bytes never leave the scan
     stage (only fixed-width integers are projected out)."""

@@ -122,10 +122,14 @@ def affected_populations(
     new_tables: dict[str, DataFrame],
     target_shapes: list[str] | None = None,
     compare_cols: dict[str, list[str]] | None = None,
+    cached: list[DataFrame] | None = None,
 ) -> dict[str, DataFrame]:
     """shape name → single-column (``__pop_id``) DataFrame of entities whose
     verdict may differ between the two table versions. Prerequisite shapes
     are resolved first so qualified-shape references propagate upward.
+    The populations are persisted; so are the per-(table, key) diffs they
+    read, which are appended to ``cached`` when it is given, for the
+    caller to unpersist.
 
     ``compare_cols``: optional table → columns narrowing for the version
     diff. MUST cover every column any constraint of the suite reads on that
@@ -141,7 +145,7 @@ def affected_populations(
             cols=(compare_cols or {}).get(table),
         )
 
-    return _expand_affected(suite, target_shapes, new_tables, diff)
+    return _expand_affected(suite, target_shapes, new_tables, diff, cached)
 
 
 def synthesize_changelog(old: DataFrame, new: DataFrame) -> DataFrame:
@@ -165,6 +169,7 @@ def affected_populations_from_changelogs(
     changelogs: dict[str, DataFrame],
     new_tables: dict[str, DataFrame],
     target_shapes: list[str] | None = None,
+    cached: list[DataFrame] | None = None,
 ) -> dict[str, DataFrame]:
     """Like :func:`affected_populations`, but the per-table change evidence
     is a changelog relation (table columns + ``_change_type``) instead of
@@ -187,7 +192,7 @@ def affected_populations_from_changelogs(
             .distinct()
         )
 
-    return _expand_affected(suite, target_shapes, new_tables, diff)
+    return _expand_affected(suite, target_shapes, new_tables, diff, cached)
 
 
 def _expand_affected(
@@ -195,6 +200,7 @@ def _expand_affected(
     target_shapes: list[str] | None,
     new_tables: dict[str, DataFrame],
     diff_fn,
+    cached: list[DataFrame] | None,
 ) -> dict[str, DataFrame]:
     """Shared DAG expansion: per-(table, key) change evidence from
     ``diff_fn(table, key) -> DataFrame['__pop_id']`` propagated up the shape
@@ -211,6 +217,8 @@ def _expand_affected(
     def diff(table: str, key: str) -> DataFrame:
         if (table, key) not in diff_cache:
             diff_cache[(table, key)] = diff_fn(table, key).persist()
+            if cached is not None:
+                cached.append(diff_cache[(table, key)])
         return diff_cache[(table, key)]
 
     def map_keys_to_entities(
@@ -354,11 +362,13 @@ def revalidate_incremental(
     the affected set and the fresh run emits nothing for them), added
     entities appear, changed entities flip, everything else is carried."""
     targets = target_shapes or suite.names()
+    diffs: list[DataFrame] = []
     pops = affected_populations(
-        suite, old_tables, new_tables, targets, compare_cols=compare_cols
+        suite, old_tables, new_tables, targets, compare_cols, diffs
     )
     return _run_restricted_and_merge(
-        spark, suite, new_tables, old_verdicts, old_violations, targets, pops, config
+        spark, suite, new_tables, old_verdicts, old_violations, targets, pops,
+        diffs, config,
     )
 
 
@@ -379,11 +389,13 @@ def revalidate_incremental_from_changelogs(
     delta between snapshots, never to the table. Same result invariant:
     equals a full ``run_suite`` of the new version."""
     targets = target_shapes or suite.names()
+    diffs: list[DataFrame] = []
     pops = affected_populations_from_changelogs(
-        suite, changelogs, new_tables, targets
+        suite, changelogs, new_tables, targets, diffs
     )
     return _run_restricted_and_merge(
-        spark, suite, new_tables, old_verdicts, old_violations, targets, pops, config
+        spark, suite, new_tables, old_verdicts, old_violations, targets, pops,
+        diffs, config,
     )
 
 
@@ -395,6 +407,7 @@ def _run_restricted_and_merge(
     old_violations: DataFrame | None,
     targets: list[str],
     pops: dict[str, DataFrame],
+    diffs: list[DataFrame],
     config: EngineConfig | None,
 ) -> SuiteResult:
     res = run_suite(
@@ -437,13 +450,13 @@ def _run_restricted_and_merge(
     verdicts = merge(old_verdicts, res.verdicts)
     violations = merge(old_violations, res.violations)
     summary = V.summarize(verdicts) if verdicts is not None else None
-    # the merged frames read the inner run's persisted frames and the
-    # affected populations: release() drops them all
+    # the merged frames read the inner run's persisted frames, the
+    # affected populations and their diffs: release() drops them all
     return SuiteResult(
         verdicts=verdicts,
         violations=violations,
         summary=summary,
         shapes_evaluated=res.shapes_evaluated,
         verdicts_by_shape=res.verdicts_by_shape,
-        _cached=res._cached + list(pops.values()),
+        _cached=res._cached + list(pops.values()) + diffs,
     )

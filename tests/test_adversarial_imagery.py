@@ -9,8 +9,16 @@ import struct
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import Row
-from pyspark.sql.types import BinaryType, StringType, StructField, StructType
+from pyspark.sql.types import (
+    BinaryType,
+    IntegerType,
+    StringType,
+    StructField,
+    StructType,
+)
 
 from shaclapi_spark.pipeline import imagery as im
 
@@ -272,3 +280,95 @@ def test_review_hostile_cases_meta_and_sql(spark):
     # dims match honors the top-down magnitude
     match = {k: r["__img_dims_ok"] for k, r in derived.items()}
     assert match["topdown"] is True and match["good"] is True
+
+
+# PPM headers whose dimension fields do not sit at the fixed-width offsets
+# the header rule reads (``P6\n%5d %5d\n255\n``): the rule cannot follow a
+# variable-width layout, so it must reject the row, never read wrong dims
+MISALIGNED_PPM = {
+    # decodable 1x1: the fixed offsets see "1 1\n2" and "5\n\0\0\0"
+    "ppm_1x1_variable": b"P6\n1 1\n255\n" + bytes(20000),
+    # digits split by spaces: decode_image raises
+    "ppm_split_digits": b"P6\n 6 4    48\n255\n" + bytes(40000),
+}
+
+
+def test_misaligned_ppm_headers_fail_closed(spark):
+    from pyspark.sql import functions as SF
+
+    from shaclapi_spark import fixtures
+
+    df = spark.createDataFrame(
+        [Row(img_id=k, bytes=v) for k, v in MISALIGNED_PPM.items()],
+        StructType(
+            [StructField("img_id", StringType()), StructField("bytes", BinaryType())]
+        ),
+    )
+    meta = {r["img_id"]: r for r in im.image_meta(df).collect()}
+    dm = df.withColumn("meta_w", SF.lit(1)).withColumn("meta_h", SF.lit(1))
+    for name, sql in fixtures.image_shape().derived_columns.items():
+        dm = dm.withColumn(name, SF.expr(sql))
+    derived = {r["img_id"]: r for r in dm.collect()}
+    for k in MISALIGNED_PPM:
+        assert meta[k]["status"] == "unsupported", (k, meta[k])
+        assert meta[k]["width"] is None and meta[k]["height"] is None
+        assert derived[k]["__img_status"] == "unsupported", k
+        assert derived[k]["__img_ok"] is False, k
+
+
+def _ppm_field_ref(field: bytes):
+    """The PPM dimension-field rule in Python: space padding around one
+    run of ASCII digits, else None."""
+    s = field.strip(b" ")
+    return int(s) if s.isdigit() else None
+
+
+def _ppm_fields(spark, blobs: list) -> list:
+    from shaclapi_spark.pipeline import headers
+
+    df = spark.createDataFrame(
+        [Row(i=i, bytes=b) for i, b in enumerate(blobs)],
+        StructType(
+            [StructField("i", IntegerType()), StructField("bytes", BinaryType())]
+        ),
+    )
+    rows = headers.project(df, headers.image_stages()).select(
+        "i", "__ppm_w", "__ppm_h"
+    )
+    return [(r["__ppm_w"], r["__ppm_h"]) for r in sorted(rows.collect())]
+
+
+_PPM_FIELD = st.one_of(
+    st.lists(
+        st.sampled_from([bytes([c]) for c in b"0123456789 \n\x00\xffx"]),
+        min_size=5,
+        max_size=5,
+    ).map(b"".join),
+    st.integers(0, 99999).map(lambda v: b"%5d" % v),
+    st.integers(0, 99999).map(lambda v: b"%-5d" % v),
+)
+
+
+@given(
+    blobs=st.lists(
+        st.tuples(_PPM_FIELD, _PPM_FIELD, st.integers(3, 20)),
+        min_size=1,
+        max_size=40,
+    )
+)
+@settings(max_examples=20, deadline=None)
+def test_ppm_field_rule_matches_reference(spark, blobs):
+    """``__ppm_w`` / ``__ppm_h`` equal the Python rule on arbitrary 5-byte
+    fields, also when the blob ends inside a field."""
+    full = [(b"P6\n" + w + b" " + h + b"\n255\n", cut) for w, h, cut in blobs]
+    cut = [b[:n] for b, n in full]
+    want = [(_ppm_field_ref(b[3:8]), _ppm_field_ref(b[9:14])) for b in cut]
+    assert _ppm_fields(spark, cut) == want
+
+
+@given(dims=st.lists(st.tuples(st.integers(0, 99999), st.integers(0, 99999)),
+                     min_size=1, max_size=60))
+@settings(max_examples=10, deadline=None)
+def test_ppm_fixed_width_header_dims(spark, dims):
+    blobs = [b"P6\n%5d %5d\n255\n" % (w, h) for w, h in dims]
+    assert _ppm_fields(spark, blobs) == dims

@@ -352,3 +352,27 @@ def test_cyclic_group_with_outside_referrer(spark):
         (r.entity_id, r.shape): r.is_valid for r in inc.verdicts.collect()
     }
     assert got[("x1", "X")] is False
+
+
+def test_release_drops_every_frame_the_call_persisted(spark, fixture_dir, tmp_path):
+    """The result owns the inner run's frames, the affected populations and
+    the per-(table, key) diffs behind them: after release() no persisted
+    RDD id is added. The tables are private copies, so no other test's
+    cached plan can match these frames'."""
+    import shutil
+
+    old = {}
+    for t in ("clips", "transcripts"):
+        shutil.copytree(fixture_dir[t], tmp_path / t)
+        old[t] = spark.read.parquet(str(tmp_path / t))
+    nc, nt = fixtures.mutate_clip_tables(old["clips"], old["transcripts"])
+    new = {"clips": nc, "transcripts": nt}
+    suite = fixtures.clip_suite(include_audio=False, include_drift=False)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    with run_suite(spark, suite, old, config=CFG) as old_res:
+        with revalidate.revalidate_incremental(
+            spark, suite, old, new, old_res.verdicts, config=CFG
+        ) as inc:
+            assert inc.verdicts.count() > 0
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
