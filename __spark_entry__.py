@@ -3223,6 +3223,8 @@ meta AS (
       WHEN is_bmp AND (bmp_bpp <> 24 OR bmp_comp <> 0) THEN 'unsupported'
       WHEN is_bmp AND NOT bmp_sane THEN 'unsupported'
       WHEN is_ppm AND NOT ppm_sane THEN 'unsupported'
+      -- maxval (bytes 16-18) other than '255': decode_image rejects it
+      WHEN is_ppm AND substr(h, 31, 6) <> '323535' THEN 'unsupported'
       WHEN blen < (CASE WHEN is_bmp
                         THEN data_off + ((3 * bmp_w + 3) // 4) * 4 * bmp_h
                         ELSE 19 + 3 * ppm_w * ppm_h END) THEN 'truncated'

@@ -1,5 +1,6 @@
 """Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR (default
-/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the cores this
+process may run on), with a driver heap of a quarter of the host's RAM.
 
 Prints ONE JSON line:
   {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...,
@@ -21,6 +22,8 @@ import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+from perfbench.spark_layers import driver_mem_mb, host_cores, host_mem_mb  # noqa: E402
 
 
 def force(df) -> int:
@@ -48,7 +51,7 @@ def noise_sentinel() -> float:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(host_cores()))
     try:
         sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", ""))
     except ValueError:
@@ -62,7 +65,7 @@ def main() -> None:
         .config("spark.sql.shuffle.partitions", str(max(8, int(cpus) * 2)))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
+        .config("spark.driver.memory", f"{driver_mem_mb(host_mem_mb())}m")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "20000")
         .config("spark.sql.files.maxPartitionBytes", "32m")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16m")

@@ -32,8 +32,6 @@ def run(
     relevant_columns: set[str] | None = None,
     config: EngineConfig | None = None,
     target_population: "str | DataFrame | None" = None,
-    order_strategy: str = "heuristic",
-    seed_shape: str | None = None,
     mode: str = "blocking",
     out_dir: str | None = None,
     n_waves: int = 8,
@@ -89,8 +87,6 @@ def run(
         relevant_columns=relevant_columns,
         config=config,
         target_population=target_population,
-        order_strategy=order_strategy,
-        seed_shape=seed_shape,
     )
 
 
@@ -133,7 +129,7 @@ def explain(
     relevant_columns: set[str] | None = None,
 ) -> dict:
     """POST /reduce analog — compile-only, no data touched: the reduced
-    shape network, its chosen evaluation order, and exactly what the
+    shape network, its evaluation order, and exactly what the
     reduction PRUNED (shapes unreachable from the targets; constraint ids
     dropped by column-relevance narrowing) — the reference's /reduce
     returns the reduced schema, this adds the audit of the reduction

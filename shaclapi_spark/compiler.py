@@ -9,14 +9,9 @@ needed. What *is* custom here mirrors the reference's metadata rewrites:
 * shape-network reachability pruning    (Reduction.py:14-23 analog)
 * query-driven constraint removal with
   OR-collapse                           (ReducedShapeParser.py:78-110 analog)
-* evaluation ordering: SCC condensation
-  topological order with pluggable
-  ready-group choice — heuristic
-  ('TARGET IN BIG' analog: helpers
-  before targets, higher dependent
-  count first), DFS/BFS traversal,
-  seed-shape override               (ReducedShapeSchema.py:64-83,
-                                     config.py:192-250 analog)
+* evaluation ordering: the SCC
+  condensation in Tarjan's
+  prerequisites-first order             (ReducedShapeSchema.py:64-83 analog)
 
 Cycles (tc3 A→C→D→A analog) condense into one SCC group evaluated
 iteratively to fixpoint with the unbound⇒valid initialization
@@ -25,9 +20,9 @@ iteratively to fixpoint with the unbound⇒valid initialization
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
-from shaclapi_spark.suite import Constraint, Shape, Suite
+from shaclapi_spark.suite import Constraint, Suite
 
 
 def prune_unreachable(suite: Suite, target_shapes: list[str]) -> Suite:
@@ -75,20 +70,13 @@ def remove_constraints(suite: Suite, target_shapes: list[str], relevant_columns:
     for s in suite.shapes:
         if s.name in target_shapes:
             cs = [_prune_constraint(c, relevant_columns) for c in s.constraints]
-            s = Shape(
-                name=s.name,
-                table=s.table,
-                entity_col=s.entity_col,
-                target_filter=s.target_filter,
-                constraints=[c for c in cs if c is not None],
-                derived_columns=s.derived_columns,
-            )
+            s = replace(s, constraints=[c for c in cs if c is not None])
         shapes.append(s)
     return Suite(shapes=shapes)
 
 
 # ---------------------------------------------------------------------------
-# ordering: Tarjan SCC condensation + heuristic topological order
+# ordering: Tarjan SCC condensation, prerequisites first
 # ---------------------------------------------------------------------------
 
 @dataclass
@@ -135,131 +123,34 @@ def _tarjan(nodes: list[str], deps: dict[str, set[str]]) -> list[list[str]]:
     return sccs  # reverse-topological: prerequisites before dependents
 
 
-def evaluation_order(
-    suite: Suite,
-    target_shapes: list[str] | None = None,
-    strategy: str = "heuristic",
-    seed_shape: str | None = None,
-) -> list[EvalGroup]:
-    """Prerequisites-first group order (every linearization emitted here is a
-    valid topological order of the SCC condensation — the batch engine needs
-    prerequisite verdicts before dependents, unlike the reference's streaming
-    traversal which may start anywhere). The knobs choose WHICH ready group
-    runs next — the batch recast of Trav-SHACL's ordering controls
-    (ref shaclapi/config.py:192-209 `traversal_strategy`/`heuristic`,
-    reduction/travshacl/ReducedShapeSchema.py:64-83 start-shape override):
+def evaluation_order(suite: Suite) -> list[EvalGroup]:
+    """The SCC condensation in Tarjan's emission order: prerequisites
+    before dependents (the batch engine needs prerequisite verdicts before
+    dependents, unlike the reference's streaming traversal, which may
+    start anywhere), and deterministic, since Tarjan walks sorted names
+    and sorted dependencies.
 
-    * strategy="heuristic" — the 'TARGET IN BIG' analog: among ready groups
-      prefer (1) groups on the seed's prerequisite path, (2) non-target
-      helper shapes (so target verdicts can reuse their cached verdicts),
-      (3) higher dependent-count (more shapes waiting on it ⇒ evaluating it
-      unblocks/feeds more reuse), (4) name.
-    * strategy="dfs" — depth-first post-order from the seed (or each target,
-      sorted): a whole prerequisite chain completes before a sibling starts.
-    * strategy="bfs" — deepest prerequisite level first, whole levels at a
-      time (longest-path depth from the targets).
-    * seed_shape — `start_shape_for_validation` analog: its prerequisite
-      downset is scheduled as early as the topology allows.
-    """
+    The order is the only one: the engine assembles each shape's plan
+    lazily and persists each shape's entity frame once per run, so which
+    ready group runs first changes neither a verdict nor a plan, and AQE
+    re-plans the joins from measured sizes. Trav-SHACL's traversal and
+    'TARGET IN BIG' choices (ref shaclapi/config.py:192-209) have nothing
+    to choose here."""
     names = suite.names()
-    targets = set(target_shapes or names)
     deps = {k: {d for d in v if d in set(names)} for k, v in suite.dependencies().items()}
-    sccs = _tarjan(names, deps)
-    gid_of = {n: gi for gi, comp in enumerate(sccs) for n in comp}
-    # condensation: group -> prerequisite groups, and dependent counts
-    gdeps: dict[int, set[int]] = {gi: set() for gi in range(len(sccs))}
-    for n, ds in deps.items():
-        for d in ds:
-            if gid_of[d] != gid_of[n]:
-                gdeps[gid_of[n]].add(gid_of[d])
-    n_dependents = {gi: 0 for gi in gdeps}
-    for gi, ds in gdeps.items():
-        for d in ds:
-            n_dependents[d] += 1
-
-    def downset(gi: int) -> set[int]:
-        out, stack = set(), [gi]
-        while stack:
-            g = stack.pop()
-            if g in out:
-                continue
-            out.add(g)
-            stack.extend(gdeps[g])
-        return out
-
-    seed_down = downset(gid_of[seed_shape]) if seed_shape in gid_of else set()
-
-    order: list[int] = []
-    if strategy == "dfs":
-        seen: set[int] = set()
-
-        def visit(gi: int) -> None:
-            if gi in seen:
-                return
-            seen.add(gi)
-            for d in sorted(gdeps[gi], key=lambda g: sccs[g][0]):
-                visit(d)
-            order.append(gi)
-
-        roots = [gid_of[seed_shape]] if seed_shape in gid_of else []
-        roots += sorted(
-            (gid_of[t] for t in targets if t in gid_of), key=lambda g: sccs[g][0]
+    return [
+        EvalGroup(
+            shapes=comp,
+            cyclic=len(comp) > 1 or comp[0] in deps.get(comp[0], set()),
         )
-        for r in roots:
-            visit(r)
-        for gi in range(len(sccs)):  # anything unreachable from the roots
-            visit(gi)
-    elif strategy == "bfs":
-        # longest-path depth from any dependent-less root: deeper ⇒ earlier.
-        # sccs is prerequisites-first, so iterate reversed (dependents first)
-        # so a dependent's final depth is known before it pushes to its deps
-        depth = {gi: 0 for gi in gdeps}
-        for gi in reversed(range(len(sccs))):
-            for d in gdeps[gi]:
-                depth[d] = max(depth[d], depth[gi] + 1)
-        order.extend(
-            sorted(range(len(sccs)), key=lambda g: (-depth[g], sccs[g][0]))
-        )
-    elif strategy == "heuristic":
-        remaining_deps = {gi: set(ds) for gi, ds in gdeps.items()}
-        ready = [gi for gi, ds in remaining_deps.items() if not ds]
-        dependents_of = {gi: set() for gi in gdeps}
-        for gi, ds in gdeps.items():
-            for d in ds:
-                dependents_of[d].add(gi)
-        while ready:
-            ready.sort(
-                key=lambda g: (
-                    0 if g in seed_down else 1,
-                    0 if not (set(sccs[g]) & targets) else 1,
-                    -n_dependents[g],
-                    sccs[g][0],
-                )
-            )
-            g = ready.pop(0)
-            order.append(g)
-            for dep in dependents_of[g]:
-                remaining_deps[dep].discard(g)
-                if not remaining_deps[dep] and dep not in order and dep not in ready:
-                    ready.append(dep)
-    else:
-        raise ValueError(f"unknown strategy {strategy!r} (heuristic|dfs|bfs)")
-
-    groups = []
-    for gi in order:
-        comp = sccs[gi]
-        cyclic = len(comp) > 1 or (comp[0] in deps.get(comp[0], set()))
-        groups.append(EvalGroup(shapes=comp, cyclic=cyclic))
-    return groups
+        for comp in _tarjan(names, deps)
+    ]
 
 
 def compile_suite(
     suite: Suite,
     target_shapes: list[str] | None = None,
     relevant_columns: set[str] | None = None,
-    prune: bool = True,
-    strategy: str = "heuristic",
-    seed_shape: str | None = None,
 ) -> tuple[Suite, list[EvalGroup]]:
     """Full driver-side compile: reduce, then order. Returns (reduced suite,
     evaluation groups prerequisites-first)."""
@@ -267,6 +158,5 @@ def compile_suite(
     reduced = suite
     if relevant_columns is not None:
         reduced = remove_constraints(reduced, targets, relevant_columns)
-    if prune:
-        reduced = prune_unreachable(reduced, targets)
-    return reduced, evaluation_order(reduced, targets, strategy, seed_shape)
+    reduced = prune_unreachable(reduced, targets)
+    return reduced, evaluation_order(reduced)

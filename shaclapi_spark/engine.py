@@ -24,6 +24,7 @@ order-insensitive hash aggregate instead of a full diff.
 
 from __future__ import annotations
 
+import itertools
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -48,16 +49,7 @@ from shaclapi_spark.suite import (
 
 @dataclass
 class EngineConfig:
-    n_buckets: int = 64
     short_circuit: bool = True          # early-fail: skip audio decode for rows already invalid
-    max_fixpoint_iters: int = 10
-    min_snr_db: float = 30.0
-    # fk_match equality via xxhash64 of both sides: the parent agg and the
-    # child-side join then shuffle fixed 8-byte hashes instead of raw payload
-    # values (transcripts are ~100-300 B each — at 10^12 rows the raw-string
-    # min/max shuffle IS the job). False-accept probability per comparison is
-    # ~2^-64 (xxhash64 collision); set False for exact raw-value comparison.
-    fk_match_by_hash: bool = True
 
 
 @dataclass
@@ -213,7 +205,7 @@ class _ShapeEvaluator:
                 df,
                 name,
                 c.params["column"],
-                float(c.params.get("min_snr_db", self.cfg.min_snr_db)),
+                float(c.params.get("min_snr_db", audio_ops.MIN_SNR_DB)),
                 precondition=pre,
             )
 
@@ -229,7 +221,7 @@ class _ShapeEvaluator:
 
         # ---- narrow projection: everything after this point shuffles (parent
         # joins, entity groupBy) — keep only the entity id, join keys, the
-        # fk_match comparison values (hashed to 8 bytes by default), and the
+        # fk_match comparison values (hashed to 8 bytes), and the
         # boolean columns. Payload columns (audio bytes, transcript text)
         # never cross a shuffle.
         fk_keys = set()
@@ -253,17 +245,16 @@ class _ShapeEvaluator:
                 continue
             if c.kind != "fk_match":
                 continue
+            # fk_match compares xxhash64 of both sides: the parent agg and
+            # the child-side join shuffle fixed 8-byte hashes instead of raw
+            # payload values (transcripts are ~100-300 B each — at 10^12 rows
+            # the raw-string min/max shuffle IS the job). A comparison
+            # false-accepts with probability ~2^-64 (an xxhash64 collision).
             raw = F.col(c.params["column"])
-            if self.cfg.fk_match_by_hash:
-                proj.append(
-                    F.when(raw.isNotNull(), F.xxhash64(raw)).alias(f"__lh_{c.id}")
-                )
-                match_col[c.id] = F.col(f"__lh_{c.id}")
-            else:
-                if c.params["column"] not in keep:
-                    keep.add(c.params["column"])
-                    proj.append(raw)
-                match_col[c.id] = raw
+            proj.append(
+                F.when(raw.isNotNull(), F.xxhash64(raw)).alias(f"__lh_{c.id}")
+            )
+            match_col[c.id] = F.col(f"__lh_{c.id}")
         # functional_dep carries xxhash64(column) (8 B per row) across the
         # entity groupBy instead of the raw value — constancy is decidable
         # from the hash alone (min==max), and payload-width columns
@@ -314,15 +305,11 @@ class _ShapeEvaluator:
                     # the shuffle over the big parent):  count == 0 ⇒ vacuous,
                     # min == max ⇒ exactly one distinct value ⇒ compare,
                     # min != max ⇒ >=2 distinct values ⇒ unsatisfiable.
-                    # By default the aggregated value is xxhash64(parent_col):
-                    # the parent shuffle carries 3×8 B per key instead of two
-                    # raw payload values (see EngineConfig.fk_match_by_hash).
+                    # The aggregated value is xxhash64(parent_col): the
+                    # parent shuffle carries 3×8 B per key instead of two
+                    # raw payload values (the child side hashes likewise).
                     pv_raw = F.col(c.params["parent_col"])
-                    pv_val = (
-                        F.when(pv_raw.isNotNull(), F.xxhash64(pv_raw))
-                        if self.cfg.fk_match_by_hash
-                        else pv_raw
-                    )
+                    pv_val = F.when(pv_raw.isNotNull(), F.xxhash64(pv_raw))
                     aggs.append(F.count(pv_val).alias(f"__pnn_{c.id}"))
                     aggs.append(F.min(pv_val).alias(f"__plo_{c.id}"))
                     aggs.append(F.max(pv_val).alias(f"__pv_{c.id}"))
@@ -731,15 +718,16 @@ def _all_valid_verdicts(shape: Shape, tables: dict[str, DataFrame]) -> DataFrame
     ).dropDuplicates(["entity_id"])
 
 
-def _verdict_fingerprint(vd: DataFrame) -> int:
-    """Order-insensitive cheap convergence check for fixpoint iteration."""
+def _verdict_fingerprint(vd: DataFrame) -> tuple[int, int]:
+    """Order-insensitive cheap convergence check for fixpoint iteration:
+    (hash of the verdicts, verdict count)."""
     row = vd.select(
         F.coalesce(
             F.bit_xor(F.xxhash64(F.col("entity_id"), F.col("is_valid"))), F.lit(0)
         ).alias("h"),
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
-    return hash((int(row.h), int(row.n)))
+    return int(row.h), int(row.n)
 
 
 def run_suite(
@@ -749,11 +737,8 @@ def run_suite(
     target_shapes: list[str] | None = None,
     relevant_columns: set[str] | None = None,
     config: EngineConfig | None = None,
-    prune: bool = True,
     preseeded_verdicts: dict[str, DataFrame] | None = None,
     target_population: "str | DataFrame | dict | None" = None,
-    order_strategy: str = "heuristic",
-    seed_shape: str | None = None,
     cyclic_seed_verdicts: DataFrame | None = None,
 ) -> SuiteResult:
     """Validate `tables` against `suite`; returns verdicts + violations +
@@ -794,16 +779,13 @@ def run_suite(
     this argument (or without full population coverage of the group) the
     cyclic fixpoint runs unrestricted, as before.
 
-    ``order_strategy`` / ``seed_shape``: see compiler.evaluation_order."""
+    A cyclic group iterates until no verdict changes. A group that
+    oscillates, which only a qualified ``max`` can cause, raises
+    ``RuntimeError`` instead of publishing an unconverged round."""
     cfg = config or EngineConfig()
     targets = target_shapes or suite.names()
     reduced, groups = compile_suite(
-        suite,
-        targets,
-        relevant_columns=relevant_columns,
-        prune=prune,
-        strategy=order_strategy,
-        seed_shape=seed_shape,
+        suite, targets, relevant_columns=relevant_columns
     )
     _check_unique_ids(reduced)
     shape_by_name = {s.name: s for s in reduced.shapes}
@@ -917,11 +899,15 @@ def run_suite(
                     ids, av["entity_id"] == ids["__pop_id"], "leftsemi"
                 )
 
-            # unbound ⇒ valid initialization, iterate to fixpoint
+            # unbound ⇒ valid initialization, iterate to fixpoint. Under
+            # min-only refs, every round after the first that changes a
+            # verdict invalidates at least one of the group's n verdicts, so
+            # the loop settles by round n + 2; a round past n + 1 that still
+            # changes means the group oscillates
             current = {n: init_valid(n) for n in group.shapes}
             fps = {n: None for n in group.shapes}
             last_viol: dict[str, DataFrame] = {}
-            for _ in range(cfg.max_fixpoint_iters):
+            for rnd in itertools.count(1):
                 prereq = dict(verdicts_by_shape)
                 for n in group.shapes:
                     prereq[n] = (
@@ -945,6 +931,12 @@ def run_suite(
                 current = new
                 if not changed:
                     break
+                n_verdicts = sum(cnt for _, cnt in fps.values())
+                if rnd > n_verdicts + 1:
+                    raise RuntimeError(
+                        f"cyclic group {group.shapes} did not converge: round"
+                        f" {rnd} still changes its {n_verdicts} verdicts"
+                    )
             for n in group.shapes:
                 # seeded runs must publish the MERGED relation (seed for
                 # unaffected entities ∪ fresh slice): downstream shapes
@@ -997,7 +989,7 @@ def run_suite(
         [violations_by_shape[n] for n in keep]
         + [d for d in (drift_vl, sb_vl) if d is not None]
     )
-    summary = V.summarize(verdicts, cfg.n_buckets)
+    summary = V.summarize(verdicts)
     return SuiteResult(
         verdicts=verdicts,
         violations=violations,

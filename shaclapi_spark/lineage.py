@@ -20,7 +20,7 @@ from __future__ import annotations
 import json
 import os
 import time
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
 from pyspark.sql import Observation, SparkSession, functions as F
 
@@ -79,21 +79,12 @@ def run_with_lineage(
 
     # dataset-level drift checks are whole-table statements — meaningless per
     # hash-wave; the caller runs them once via run_suite on the full input
-    from shaclapi_spark.suite import Shape, Suite as _Suite
-
-    wave_shapes = []
-    for s in suite.shapes:
-        wave_shapes.append(
-            Shape(
-                name=s.name,
-                table=s.table,
-                entity_col=s.entity_col,
-                target_filter=s.target_filter,
-                constraints=[c for c in s.constraints if c.kind != "drift"],
-                derived_columns=s.derived_columns,
-            )
-        )
-    wave_suite = _Suite(shapes=wave_shapes)
+    wave_suite = Suite(
+        shapes=[
+            replace(s, constraints=[c for c in s.constraints if c.kind != "drift"])
+            for s in suite.shapes
+        ]
+    )
 
     # waves partition the TARGET entity space only; a target inside a shape
     # cycle would need cross-wave fixpoints — run those via run_suite instead

@@ -21,6 +21,10 @@ from pyspark.sql.types import DoubleType
 
 from shaclapi_spark import audio_codec
 
+#: default SNR floor of ``audio_valid`` (a constraint's ``min_snr_db``
+#: param overrides it)
+MIN_SNR_DB = 30.0
+
 
 @pandas_udf(DoubleType())
 def _snr_db_udf(blobs: pd.Series) -> pd.Series:
@@ -46,7 +50,7 @@ def with_audio_check(
     df: DataFrame,
     out_col: str,
     bytes_col: str,
-    min_snr_db: float = 30.0,
+    min_snr_db: float = MIN_SNR_DB,
     precondition: Column | None = None,
 ) -> DataFrame:
     """Adds boolean ``out_col``: True iff decode succeeds and SNR ≥ threshold.

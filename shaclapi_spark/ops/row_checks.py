@@ -11,6 +11,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, functions as F
 
+from shaclapi_spark.ops.audio import MIN_SNR_DB
 from shaclapi_spark.suite import Constraint
 
 
@@ -51,7 +52,7 @@ def describe(c: Constraint) -> str:
     if c.kind == "expr":
         return f"expr({p['sql']})"
     if c.kind == "audio_valid":
-        return f"audio_valid({p['column']} snr>={p.get('min_snr_db', 30.0)}dB)"
+        return f"audio_valid({p['column']} snr>={p.get('min_snr_db', MIN_SNR_DB)}dB)"
     if c.kind == "unique":
         return f"unique({p.get('column', '<entity>')})"
     if c.kind == "functional_dep":

@@ -106,6 +106,8 @@ PPM = {
     "__ppm": MAGIC["ppm"],
     "__ppm_w": _ascii_int(4, 5),
     "__ppm_h": _ascii_int(10, 5),
+    # decode_image reads only maxval 255
+    "__ppm_255": _magic(b"255", 16),
 }
 
 SGV1 = {
@@ -136,8 +138,9 @@ _IMAGE_RULE = [
         "__img_w": "CASE WHEN __bmp THEN __bmp_w WHEN __ppm THEN __ppm_w END",
         "__img_h": "CASE WHEN __bmp THEN __bmp_h WHEN __ppm THEN __ppm_h END",
         "__img_bpp": "CASE WHEN __bmp THEN __bmp_bpp WHEN __ppm THEN 24 END",
-        "__img_variant_ok": "NOT __bmp OR (__bmp_bpp = 24 AND __bmp_comp = 0"
-        " AND __bmp_planes = 1 AND __bmp_hdr_size >= 40)",
+        "__img_variant_ok": "CASE WHEN __bmp THEN __bmp_bpp = 24"
+        " AND __bmp_comp = 0 AND __bmp_planes = 1 AND __bmp_hdr_size >= 40"
+        " ELSE __ppm_255 END",
         # dims sanity, checked BEFORE any size product (MAX_DIM); 5 ascii
         # digits cap a PPM side at 99,999, so 3·w·h cannot overflow
         "__img_sane": f"CASE WHEN __bmp THEN __bmp_w BETWEEN 1 AND {MAX_DIM}"

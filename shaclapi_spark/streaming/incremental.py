@@ -93,7 +93,7 @@ def row_verdict_stream(
             df,
             name,
             c.params["column"],
-            float(c.params.get("min_snr_db", cfg.min_snr_db)),
+            float(c.params.get("min_snr_db", audio_ops.MIN_SNR_DB)),
             precondition=pre,
         )
         cols[c.id] = F.col(name)

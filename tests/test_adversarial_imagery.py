@@ -291,6 +291,8 @@ MISALIGNED_PPM = {
     # digits split by spaces: decode_image raises
     "ppm_split_digits": b"P6\n 6 4    48\n255\n" + bytes(40000),
 }
+# fixed-width, but maxval 0: decode_image reads only maxval 255
+BAD_MAXVAL_PPM = {"ppm_maxval_0": b"P6\n    8     6\n  0\n" + bytes(144)}
 
 
 def test_misaligned_ppm_headers_fail_closed(spark):
@@ -298,8 +300,9 @@ def test_misaligned_ppm_headers_fail_closed(spark):
 
     from shaclapi_spark import fixtures
 
+    cases = {**MISALIGNED_PPM, **BAD_MAXVAL_PPM}
     df = spark.createDataFrame(
-        [Row(img_id=k, bytes=v) for k, v in MISALIGNED_PPM.items()],
+        [Row(img_id=k, bytes=v) for k, v in cases.items()],
         StructType(
             [StructField("img_id", StringType()), StructField("bytes", BinaryType())]
         ),
@@ -309,11 +312,14 @@ def test_misaligned_ppm_headers_fail_closed(spark):
     for name, sql in fixtures.image_shape().derived_columns.items():
         dm = dm.withColumn(name, SF.expr(sql))
     derived = {r["img_id"]: r for r in dm.collect()}
-    for k in MISALIGNED_PPM:
+    for k in cases:
         assert meta[k]["status"] == "unsupported", (k, meta[k])
-        assert meta[k]["width"] is None and meta[k]["height"] is None
         assert derived[k]["__img_status"] == "unsupported", k
         assert derived[k]["__img_ok"] is False, k
+    for k in MISALIGNED_PPM:
+        assert meta[k]["width"] is None and meta[k]["height"] is None
+    with pytest.raises(ValueError, match="unsupported PPM variant"):
+        im.decode_image(BAD_MAXVAL_PPM["ppm_maxval_0"])
 
 
 def _ppm_field_ref(field: bytes):

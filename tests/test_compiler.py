@@ -3,6 +3,9 @@
 objects after query-driven constraint removal, incl. OR-collapse and shape
 elimination)."""
 
+from hypothesis import given, settings
+from hypothesis import strategies as st
+
 from shaclapi_spark.compiler import (
     compile_suite,
     evaluation_order,
@@ -104,8 +107,7 @@ def test_self_cycle():
 
 
 # ---------------------------------------------------------------------------
-# ordering strategies (TARGET IN BIG analog, DFS/BFS, seed override —
-# ref config.py:192-250, reduction/travshacl/ReducedShapeSchema.py:64-83)
+# the one evaluation order: the SCC condensation, prerequisites first
 # ---------------------------------------------------------------------------
 
 def _q(cid, ref):
@@ -125,59 +127,66 @@ def _diamond():
     )
 
 
-def test_heuristic_order_diamond():
-    order = [g.shapes[0] for g in evaluation_order(_diamond(), ["A"])]
+def test_order_diamond():
+    order = [g.shapes[0] for g in evaluation_order(_diamond())]
     assert order == ["D", "B", "C", "A"]
 
 
-def test_heuristic_prefers_helpers_over_targets():
-    # C is a pure helper: at the same ready level it runs before target B
-    order = [g.shapes[0] for g in evaluation_order(_diamond(), ["A", "B"])]
-    assert order == ["D", "C", "B", "A"]
-
-
-def test_heuristic_higher_dependent_count_first():
-    suite = Suite(
-        shapes=[
-            Shape("A", "t", "id", constraints=[_q("a_b", "B"), _q("a_c", "C")]),
-            Shape("B", "t", "id", constraints=[_q("b_e", "E"), _q("b_f", "F")]),
-            Shape("C", "t", "id", constraints=[_q("c_e", "E")]),
-            Shape("E", "t", "id", constraints=[]),
-            Shape("F", "t", "id", constraints=[]),
-        ]
-    )
-    order = [g.shapes[0] for g in evaluation_order(suite, ["A"])]
-    # E has 2 dependents, F has 1 → E first among the initially-ready helpers
-    assert order.index("E") < order.index("F")
-    assert order.index("E") < order.index("B") and order.index("F") < order.index("B")
-
-
-def test_dfs_order():
-    order = [g.shapes[0] for g in evaluation_order(_diamond(), ["A"], strategy="dfs")]
-    assert order == ["D", "B", "C", "A"]
-
-
-def test_bfs_order():
-    order = [g.shapes[0] for g in evaluation_order(_diamond(), ["A"], strategy="bfs")]
-    assert order == ["D", "B", "C", "A"]
-
-
-def test_seed_shape_override():
-    order = [
-        g.shapes[0]
-        for g in evaluation_order(_diamond(), ["A"], seed_shape="C")
-    ]
-    # C's prerequisite downset {C, D} is scheduled as early as topology allows
-    assert order == ["D", "C", "B", "A"]
-
-
-def test_all_strategies_are_topological():
+def test_order_is_topological():
     suite = clip_cycle_suite()
-    for strategy in ("heuristic", "dfs", "bfs"):
-        groups = evaluation_order(suite, strategy=strategy)
-        seen = set()
-        for g in groups:
-            for n in g.shapes:
-                deps = suite.shape(n).shape_refs() - set(g.shapes)
-                assert deps <= seen, (strategy, n)
-            seen |= set(g.shapes)
+    seen = set()
+    for g in evaluation_order(suite):
+        for n in g.shapes:
+            assert suite.shape(n).shape_refs() - set(g.shapes) <= seen, n
+        seen |= set(g.shapes)
+
+
+@st.composite
+def _networks(draw):
+    """Up to 8 shapes with random qualified_shape refs (self-loops and
+    cycles included), plus the same shapes in a random order."""
+    names = [f"S{i}" for i in range(draw(st.integers(1, 8)))]
+    refs = {
+        n: draw(st.sets(st.sampled_from(names), max_size=len(names)))
+        for n in names
+    }
+    shapes = [
+        Shape(n, "t", "id", constraints=[_q(f"{n}_{r}", r) for r in sorted(refs[n])])
+        for n in names
+    ]
+    return refs, shapes, draw(st.permutations(shapes))
+
+
+@settings(max_examples=200, deadline=None)
+@given(_networks())
+def test_order_is_the_scc_condensation(network):
+    refs, shapes, shuffled = network
+    groups = evaluation_order(Suite(shapes=shapes))
+
+    def reach(a):
+        out, stack = set(), [a]
+        while stack:
+            for r in refs[stack.pop()]:
+                if r not in out:
+                    out.add(r)
+                    stack.append(r)
+        return out
+
+    reachable = {n: reach(n) for n in refs}
+    # every shape lands in exactly one group
+    placed = [n for g in groups for n in g.shapes]
+    assert sorted(placed) == sorted(refs)
+    pos = {n: i for i, g in enumerate(groups) for n in g.shapes}
+    for i, g in enumerate(groups):
+        # a group is a strongly connected component: its members reach each
+        # other, and no outside shape is reachable both ways
+        for a in g.shapes:
+            for b in refs:
+                mutual = b == a or (b in reachable[a] and a in reachable[b])
+                assert mutual == (b in g.shapes), (a, b)
+        # refs leaving a group point to an earlier group
+        for a in g.shapes:
+            assert all(pos[r] < i for r in refs[a] if r not in g.shapes)
+        assert g.cyclic == (len(g.shapes) > 1 or g.shapes[0] in refs[g.shapes[0]])
+    # the declaration order of the shapes does not matter
+    assert evaluation_order(Suite(shapes=list(shuffled))) == groups

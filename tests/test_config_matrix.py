@@ -35,14 +35,12 @@ def test_perf_flags_do_not_change_verdicts(
     assert verdict_sets(res.verdicts, ["ClipShape"]) == baseline_sets
 
 
-@pytest.mark.parametrize("prune", [True, False])
-def test_target_restriction_and_prune(spark, fixture_tables, baseline_sets, prune):
+def test_target_restriction_and_prune(spark, fixture_tables, baseline_sets):
     res = run_suite(
         spark,
         fixtures.clip_suite(include_audio=True, include_drift=False),
         fixture_tables,
         target_shapes=["ClipShape"],
-        prune=prune,
     )
     got = verdict_sets(res.verdicts, ["ClipShape"])
     assert got == baseline_sets

@@ -10,6 +10,7 @@ import duckdb
 import pytest
 
 from shaclapi_spark import engine, fixtures, oracle
+from shaclapi_spark.suite import Constraint, Shape, Suite
 
 
 @pytest.fixture(scope="module")
@@ -98,3 +99,57 @@ def test_cycle_verdicts_complete(cycle_result, fixture_tables):
     }
     assert counts["ClipShape"] == n_clips
     assert counts["TranscriptShape"] == n_tr
+
+
+def _self_ref_suite(**bounds):
+    return Suite(
+        shapes=[
+            Shape(
+                "S",
+                "t",
+                "id",
+                constraints=[
+                    Constraint(
+                        "kids",
+                        "qualified_shape",
+                        {"child": "t", "fk": "parent_id", "shape": "S", **bounds},
+                    )
+                ],
+            )
+        ]
+    )
+
+
+def test_long_chain_reaches_the_greatest_fixpoint(spark):
+    # e_i.parent_id = e_{i-1}: each round invalidates one more link, from
+    # the childless tail e14 up to e0 — more rounds than any fixed cap
+    n = 15
+    parent = {f"e{i}": (f"e{i - 1}" if i else None) for i in range(n)}
+    t = spark.createDataFrame(
+        list(parent.items()), "id string, parent_id string"
+    )
+    res = engine.run_suite(spark, _self_ref_suite(min=1), {"t": t})
+    got = {r.entity_id: r.is_valid for r in res.verdicts.collect()}
+
+    # greatest fixpoint in plain Python: from all-valid, an entity stays
+    # valid while at least one child is valid
+    valid = dict.fromkeys(parent, True)
+    while True:
+        nxt = {
+            e: any(valid[c] for c, p in parent.items() if p == e) for e in parent
+        }
+        if nxt == valid:
+            break
+        valid = nxt
+    assert got == valid
+    assert not any(valid.values())
+
+
+def test_oscillating_cycle_raises(spark):
+    # a and b are each other's only child; with max=0 an entity is valid
+    # iff its child is invalid, so the pair flips every round
+    t = spark.createDataFrame(
+        [("a", "b"), ("b", "a")], "id string, parent_id string"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        engine.run_suite(spark, _self_ref_suite(max=0), {"t": t})
