@@ -3225,6 +3225,9 @@ meta AS (
       WHEN is_ppm AND NOT ppm_sane THEN 'unsupported'
       -- maxval (bytes 16-18) other than '255': decode_image rejects it
       WHEN is_ppm AND substr(h, 31, 6) <> '323535' THEN 'unsupported'
+      -- separators (bytes 3, 9, 15, 19) other than the fixed layout's
+      WHEN is_ppm AND (substr(h, 5, 2) <> '0A' OR substr(h, 17, 2) <> '20'
+        OR substr(h, 29, 2) <> '0A' OR substr(h, 37, 2) <> '0A') THEN 'unsupported'
       WHEN blen < (CASE WHEN is_bmp
                         THEN data_off + ((3 * bmp_w + 3) // 4) * 4 * bmp_h
                         ELSE 19 + 3 * ppm_w * ppm_h END) THEN 'truncated'

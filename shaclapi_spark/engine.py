@@ -16,6 +16,12 @@ Per-shape physical shape (SURVEY.md §7, scale-first):
 Shapes that declare no `unique` constraint are treated as entity-grain and
 skip the groupBy entirely (zero-shuffle fast path — e.g. TranscriptShape).
 
+The plan is assembled by stage, not by column (each DataFrame or Column
+call is a JVM round trip, and each DataFrame call re-analyses the plan):
+one ``withColumns`` per derived-column dependency stage, for the row bools
+and per parent group's fk bools; verdict, reason and violation columns are
+SQL text, one ``selectExpr`` apiece. The summary is built when read.
+
 Cyclic shape groups (tc3 analog) run to fixpoint from the all-valid
 (unbound⇒valid) initialization; invalidation through qualified-min
 constraints is monotone, and convergence is detected with a cheap
@@ -24,7 +30,9 @@ order-insensitive hash aggregate instead of a full diff.
 
 from __future__ import annotations
 
+import functools
 import itertools
+import re
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -54,17 +62,21 @@ class EngineConfig:
 
 @dataclass
 class SuiteResult:
-    """One run's verdicts, violations and summary. The run persisted the
+    """One run's verdicts and violations; the per-bucket ``summary`` is
+    built from the verdicts when first read. The run persisted the
     entity-grain frame of every acyclic shape (and every restricted
     population); the result owns those caches until :meth:`release`, which
     is also called on leaving a ``with`` block."""
 
     verdicts: DataFrame
     violations: DataFrame
-    summary: DataFrame
     shapes_evaluated: list[str] = field(default_factory=list)
     verdicts_by_shape: dict[str, DataFrame] = field(default_factory=dict)
     _cached: list[DataFrame] = field(default_factory=list, repr=False)
+
+    @functools.cached_property
+    def summary(self) -> DataFrame | None:
+        return V.summarize(self.verdicts) if self.verdicts is not None else None
 
     def release(self) -> None:
         """Unpersist every frame this run persisted. Result frames stay
@@ -81,8 +93,78 @@ class SuiteResult:
         self.release()
 
 
-def _bool_col(name: str) -> Column:
-    return F.coalesce(F.col(name), F.lit(True))  # unbound ⇒ valid
+def sql_ident(name: str) -> str:
+    """``name`` as a backticked Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _col(name: str) -> Column:
+    """The column literally named ``name`` (dots and backticks included,
+    which ``F.col`` would parse)."""
+    return F.col(sql_ident(name))
+
+
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash escapes, the parser's
+    default, so ``\\`` and ``'`` are escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def derived_stages(derived: dict[str, str]) -> list[dict[str, str]]:
+    """Ordered ``Shape.derived_columns`` cut into dependency stages. A
+    column opens a new stage iff its SQL names a column the current stage
+    defines (a case-insensitive whole-word match, so backticked names
+    match too) or it redefines one. Each stage then reads only the source
+    and earlier stages, as the columns applied one at a time would."""
+    stages: list[dict[str, str]] = []
+    for name, sql in derived.items():
+        if not stages or any(
+            n.lower() == name.lower()
+            or re.search(rf"(?<!\w){re.escape(n)}(?!\w)", sql, re.IGNORECASE)
+            for n in stages[-1]
+        ):
+            stages.append({})
+        stages[-1][name] = sql
+    return stages
+
+
+def with_derived(df: DataFrame, derived: dict[str, str] | None) -> DataFrame:
+    """``derived`` (``Shape.derived_columns``) projected with one
+    ``withColumns`` per dependency stage: derive-once-check-many, so each
+    constraint reading a derived column compiles to a plain column read
+    instead of re-expanding its (possibly huge) expression tree."""
+    for stage in derived_stages(derived or {}):
+        df = df.withColumns({n: F.expr(sql) for n, sql in stage.items()})
+    return df
+
+
+def verdict_sql(cs: list[Constraint], oks: list[str]) -> tuple[str, str]:
+    """(``is_valid``, ``reason``) as SQL over ``oks``, the non-NULL bool
+    of each top-level constraint in ``cs``: reason names the first failing
+    constraint in declaration order (a qualified_shape names its referenced
+    shape, tc4 semantics), NULL for a valid entity."""
+    valid = " AND ".join(oks) or "true"
+    whens = " ".join(
+        f"WHEN NOT {ok} THEN "
+        + sql_str(c.params["shape"] if c.kind == "qualified_shape" else c.id)
+        for c, ok in zip(cs, oks)
+    )
+    reason = f"CASE {whens} END" if whens else "CAST(NULL AS STRING)"
+    return valid, reason
+
+
+def violations_sql(cs: list[Constraint], oks: list[str], details: list[str]) -> str:
+    """A generator over one row per failing constraint, columns
+    (constraint_id, detail): ``details`` are SQL string expressions."""
+    if not cs:
+        typ = "ARRAY<STRUCT<constraint_id: STRING, detail: STRING>>"
+        return f"inline(CAST(array() AS {typ}))"
+    structs = ", ".join(
+        f"CASE WHEN NOT {ok} THEN named_struct('constraint_id', {sql_str(c.id)},"
+        f" 'detail', {d}) END"
+        for c, ok, d in zip(cs, oks, details)
+    )
+    return f"inline(filter(array({structs}), x -> x IS NOT NULL))"
 
 
 class _ShapeEvaluator:
@@ -90,7 +172,6 @@ class _ShapeEvaluator:
 
     def __init__(
         self,
-        spark: SparkSession,
         shape: Shape,
         tables: dict[str, DataFrame],
         prereq_verdicts: dict[str, DataFrame],
@@ -98,11 +179,12 @@ class _ShapeEvaluator:
         entity_col_by_shape: dict[str, str] | None = None,
         population: DataFrame | None = None,
     ):
-        self.spark = spark
         self.shape = shape
         self.tables = tables
         self.prereq = prereq_verdicts
         self.cfg = config
+        # join key of a qualified ref: the referenced shape's entity column
+        # (the referenced shape's table is the child table)
         self._ref_entity_cols = entity_col_by_shape or {}
         # entity-id restriction (one column `__pop_id`): validate only these
         # entities — the batch analog of the reference's replaced target query
@@ -149,9 +231,9 @@ class _ShapeEvaluator:
 
     # ---- plan assembly ----------------------------------------------------
 
-    def entity_bools(self) -> tuple[DataFrame, dict[str, Column]]:
+    def entity_bools(self) -> tuple[DataFrame, dict[str, str]]:
         """Returns (entity-grain DF with one `b_<cid>` column per leaf
-        constraint, {cid: entity-level bool Column})."""
+        constraint, {cid: entity-level bool as Spark SQL text})."""
         shape = self.shape
         df = self.tables[shape.table]
         if shape.target_filter:
@@ -165,13 +247,9 @@ class _ShapeEvaluator:
                 "leftsemi",
             )
 
-        # derived columns: derive-once-check-many — each SQL expression is
-        # projected ONCE here, so constraints referencing it compile to a
-        # plain column read instead of re-expanding the (possibly huge)
-        # expression tree per constraint (measured 5x on the image suite,
+        # derived columns, projected once (measured 5x on the image suite,
         # whose container-header parse is ~100 expression nodes)
-        for dname, dsql in (shape.derived_columns or {}).items():
-            df = df.withColumn(dname, F.expr(dsql))
+        df = with_derived(df, shape.derived_columns)
 
         # monotonic constraints re-aggregate the filtered source at
         # (entity, order_by) grain — capture it before the narrow projection
@@ -179,14 +257,15 @@ class _ShapeEvaluator:
         mono_src = df if self.mono_cs else None
 
         top_level_ids = {c.id for c in shape.constraints}
-        row_bool_names: list[str] = []
-        precond_names: list[str] = []  # only top-level row checks may short-circuit
-        for c in self.row_cs:
-            name = f"b_{c.id}"
-            df = df.withColumn(name, row_predicate(c))
-            row_bool_names.append(name)
-            if c.id in top_level_ids:
-                precond_names.append(name)
+        row_bool_names = [f"b_{c.id}" for c in self.row_cs]
+        if self.row_cs:
+            df = df.withColumns({f"b_{c.id}": row_predicate(c) for c in self.row_cs})
+        # only top-level row checks may short-circuit
+        precond = " AND ".join(
+            f"coalesce({sql_ident('b_' + c.id)}, true)"  # unbound ⇒ valid
+            for c in self.row_cs
+            if c.id in top_level_ids and self.cfg.short_circuit
+        )
 
         # audio UDF runs SCAN-SIDE, before any join/shuffle — the payload
         # bytes column is consumed here and pruned from everything downstream
@@ -196,17 +275,12 @@ class _ShapeEvaluator:
         # their entity verdict is already invalid either way, and the scan-side
         # placement is the 100-TB win.
         for c in self.audio_cs:
-            name = f"b_{c.id}"
-            pre = F.lit(True)
-            if self.cfg.short_circuit:
-                for rb in precond_names:
-                    pre = pre & _bool_col(rb)
             df = audio_ops.with_audio_check(
                 df,
-                name,
+                f"b_{c.id}",
                 c.params["column"],
                 float(c.params.get("min_snr_db", audio_ops.MIN_SNR_DB)),
-                precondition=pre,
+                precondition=F.expr(precond or "true"),
             )
 
         # child-side join keys that live on the shape's own table (inverse-path
@@ -233,7 +307,7 @@ class _ShapeEvaluator:
             )
         keep = {shape.entity_col, *fk_keys, *local_keys}
         proj: list[Column] = [F.col(n) for n in sorted(keep)]
-        match_col: dict[str, Column] = {}  # constraint id -> child-side value
+        match_col: dict[str, str] = {}  # constraint id -> child-side value (SQL)
         for c in self.fk_cs:
             if c.kind == "fk_near_match":
                 # edit distance needs the raw chars — no hash shortcut;
@@ -241,7 +315,7 @@ class _ShapeEvaluator:
                 if c.params["column"] not in keep:
                     keep.add(c.params["column"])
                     proj.append(F.col(c.params["column"]))
-                match_col[c.id] = F.col(c.params["column"])
+                match_col[c.id] = sql_ident(c.params["column"])
                 continue
             if c.kind != "fk_match":
                 continue
@@ -254,7 +328,7 @@ class _ShapeEvaluator:
             proj.append(
                 F.when(raw.isNotNull(), F.xxhash64(raw)).alias(f"__lh_{c.id}")
             )
-            match_col[c.id] = F.col(f"__lh_{c.id}")
+            match_col[c.id] = sql_ident(f"__lh_{c.id}")
         # functional_dep carries xxhash64(column) (8 B per row) across the
         # entity groupBy instead of the raw value — constancy is decidable
         # from the hash alone (min==max), and payload-width columns
@@ -270,12 +344,11 @@ class _ShapeEvaluator:
         # duplicate entity rows the entity grain takes MAX (deterministic)
         rec_cs = [c for c in self.child_cs if c.kind == "reconcile"]
         for c in rec_cs:
-            df = df.withColumn(
-                f"__exp_{c.id}", F.expr(c.params["expected"]).cast("long")
+            proj.append(
+                F.expr(c.params["expected"]).cast("long").alias(f"__exp_{c.id}")
             )
-            proj.append(F.col(f"__exp_{c.id}"))
         all_row_names = row_bool_names + [f"b_{c.id}" for c in self.audio_cs]
-        proj += [F.col(n) for n in all_row_names]
+        proj += [_col(n) for n in all_row_names]
         df = df.select(*proj)
 
         # parent joins: fk_exists (marker) and fk_match (parent-value
@@ -330,71 +403,57 @@ class _ShapeEvaluator:
             df = df.join(
                 pagg, df[local_key] == pagg[f"__pjk_{gi}"], "left"
             ).drop(f"__pjk_{gi}")
+            lk, mk = sql_ident(local_key), sql_ident(marker)
+            fk_bools: dict[str, str] = {}
             for c in cs:
-                name = f"b_{c.id}"
                 if c.kind == "fk_exists":
-                    b = F.when(
-                        F.col(local_key).isNull(), F.lit(True)
-                    ).otherwise(F.col(marker).isNotNull())
+                    b = f"CASE WHEN {lk} IS NULL THEN true ELSE {mk} IS NOT NULL END"
                 elif c.kind == "fk_not_exists":
                     # blocklist semantics: valid iff the key hit NO parent row
-                    b = F.when(
-                        F.col(local_key).isNull(), F.lit(True)
-                    ).otherwise(F.col(marker).isNull())
+                    b = f"CASE WHEN {lk} IS NULL THEN true ELSE {mk} IS NULL END"
                 elif c.kind == "fk_near_match":
-                    lv = match_col[c.id]
-                    pl = F.col(f"__pl_{c.id}")
-                    max_edits = c.params.get("max_edits")
-                    max_ppm = c.params.get("max_cer_ppm")
-
-                    # NB: PySpark HOF lambdas must take exactly the HOF's
-                    # arity — capture lv/k/ppm via closure, not defaults.
-                    # F.forall consumes the lambda within this loop
-                    # iteration, so late binding is safe.
-                    def _near(v: Column) -> Column:
-                        lv, k, ppm = match_col[c.id], max_edits, max_ppm
-                        if ppm is None:
-                            # absolute tolerance only: length-gap short
-                            # circuit + thresholded levenshtein (O(k·len),
-                            # returns -1 past the threshold — never O(n·m))
-                            return (lv == v) | (
-                                (
-                                    F.abs(F.length(lv) - F.length(v))
-                                    <= F.lit(int(k))
-                                )
-                                & (F.levenshtein(lv, v, int(k)) >= 0)
-                            )
-                        dist = F.when(lv == v, F.lit(0)).otherwise(
-                            F.levenshtein(lv, v)
+                    lv, pl = match_col[c.id], sql_ident(f"__pl_{c.id}")
+                    k = c.params.get("max_edits")
+                    ppm = c.params.get("max_cer_ppm")
+                    v = "__parent_v"  # the lambda variable over parent values
+                    if ppm is None:
+                        # absolute tolerance only: length-gap short circuit +
+                        # thresholded levenshtein (O(k·len), returns -1 past
+                        # the threshold — never O(n·m))
+                        near = (
+                            f"{lv} = {v} OR (abs(length({lv}) - length({v}))"
+                            f" <= {int(k)} AND levenshtein({lv}, {v}, {int(k)}) >= 0)"
                         )
-                        ok = (F.lit(1_000_000) * dist.cast("long")) <= (
-                            F.lit(int(ppm)) * F.length(v).cast("long")
+                    else:
+                        dist = (
+                            f"CASE WHEN {lv} = {v} THEN 0"
+                            f" ELSE levenshtein({lv}, {v}) END"
+                        )
+                        near = (
+                            f"1000000 * CAST({dist} AS BIGINT)"
+                            f" <= {int(ppm)} * CAST(length({v}) AS BIGINT)"
                         )
                         if k is not None:
-                            ok = ok & (dist <= F.lit(int(k)))
-                        return ok
-
-                    b = F.when(
-                        F.col(local_key).isNull()
-                        | F.col(marker).isNull()
-                        | lv.isNull()
-                        | (F.size(pl) == 0),  # all parent values NULL ⇒ vacuous
-                        F.lit(True),
-                    ).otherwise(F.forall(pl, _near))
+                            near += f" AND {dist} <= {int(k)}"
+                    # all parent values NULL (empty list) ⇒ vacuous
+                    b = (
+                        f"CASE WHEN {lk} IS NULL OR {mk} IS NULL OR {lv} IS NULL"
+                        f" OR size({pl}) = 0 THEN true"
+                        f" ELSE forall({pl}, {v} -> {near}) END"
+                    )
                 else:
                     lv = match_col[c.id]
-                    pv = F.col(f"__pv_{c.id}")
-                    lo = F.col(f"__plo_{c.id}")
-                    nn = F.col(f"__pnn_{c.id}")
-                    b = F.when(
-                        F.col(local_key).isNull()
-                        | F.col(marker).isNull()
-                        | lv.isNull()
-                        | (nn == 0),  # all parent values NULL ⇒ vacuous
-                        F.lit(True),
-                    ).otherwise((lo == pv) & (lv == pv))
-                df = df.withColumn(name, b)
-                row_bool_names.append(name)
+                    pv, lo, nn = (
+                        sql_ident(f"{p}_{c.id}") for p in ("__pv", "__plo", "__pnn")
+                    )
+                    # all parent values NULL (nn = 0) ⇒ vacuous
+                    b = (
+                        f"CASE WHEN {lk} IS NULL OR {mk} IS NULL OR {lv} IS NULL"
+                        f" OR {nn} = 0 THEN true ELSE {lo} = {pv} AND {lv} = {pv} END"
+                    )
+                fk_bools[f"b_{c.id}"] = b
+            df = df.withColumns({n: F.expr(b) for n, b in fk_bools.items()})
+            row_bool_names += fk_bools
             df = df.drop(
                 marker,
                 *[f"__pv_{c.id}" for c in cs if c.kind == "fk_match"],
@@ -412,32 +471,37 @@ class _ShapeEvaluator:
         entity = shape.entity_col
         grouped = bool(self.unique_cs or self.fdep_cs or self.mono_cs)
         if grouped:
-            aggs = (
-                [F.count(F.lit(1)).alias("__n_rows")]
-                + [F.bool_and(F.col(n)).alias(n) for n in all_row_names]
-                + [F.first(F.col(k)).alias(k) for k in local_keys]
-            )
+            aggs = [
+                "count(1) AS __n_rows",
+                *[f"bool_and({sql_ident(n)}) AS {sql_ident(n)}" for n in all_row_names],
+            ]
             for c in self.fdep_cs:
-                aggs.append(F.min(F.col(f"__fd_{c.id}")).alias(f"__fdlo_{c.id}"))
-                aggs.append(F.max(F.col(f"__fd_{c.id}")).alias(f"__fdhi_{c.id}"))
+                fd = sql_ident(f"__fd_{c.id}")
+                aggs.append(f"min({fd}) AS {sql_ident(f'__fdlo_{c.id}')}")
+                aggs.append(f"max({fd}) AS {sql_ident(f'__fdhi_{c.id}')}")
             for c in rec_cs:
-                aggs.append(F.max(F.col(f"__exp_{c.id}")).alias(f"__exp_{c.id}"))
-            ent = df.groupBy(F.col(entity).alias("entity_id")).agg(*aggs)
+                exp = sql_ident(f"__exp_{c.id}")
+                aggs.append(f"max({exp}) AS {exp}")
+            ent = df.groupBy(F.col(entity).alias("entity_id")).agg(
+                *[F.expr(a) for a in aggs],
+                *[F.first(F.col(k)).alias(k) for k in local_keys],
+            )
         else:
             ent = df.withColumn("__n_rows", F.lit(1)).withColumnRenamed(
                 entity, "entity_id"
             )
 
-        bools: dict[str, Column] = {c.id: F.col(f"b_{c.id}") for c in self.row_cs}
-        bools.update({c.id: F.col(f"b_{c.id}") for c in self.fk_cs})
-        bools.update({c.id: F.col(f"b_{c.id}") for c in self.audio_cs})
+        bools = {
+            c.id: sql_ident(f"b_{c.id}")
+            for c in (*self.row_cs, *self.fk_cs, *self.audio_cs)
+        }
         for c in self.unique_cs:
-            bools[c.id] = F.col("__n_rows") == 1
+            bools[c.id] = "__n_rows = 1"
         for c in self.fdep_cs:
-            lo, hi = F.col(f"__fdlo_{c.id}"), F.col(f"__fdhi_{c.id}")
+            lo, hi = sql_ident(f"__fdlo_{c.id}"), sql_ident(f"__fdhi_{c.id}")
             # min/max skip NULLs: lo NULL ⇒ all values NULL ⇒ vacuously
             # constant (not_null's job, not functional_dep's)
-            bools[c.id] = lo.isNull() | (lo == hi)
+            bools[c.id] = f"{lo} IS NULL OR {lo} = {hi}"
 
         # child aggregates: one groupBy per (child table, fk, local join key),
         # all count columns for that child fused into the single pass
@@ -466,7 +530,7 @@ class _ShapeEvaluator:
                     (
                         c.params["shape"],
                         c.params.get("ref_key")
-                        or self._ref_entity_col(c.params["shape"], child_name),
+                        or self._ref_entity_cols[c.params["shape"]],
                     )
                     for c in cs
                     if c.kind == "qualified_shape"
@@ -484,14 +548,13 @@ class _ShapeEvaluator:
                 # they were produced by casting this very column to string).
                 # Non-integral keys fall back to casting the child side.
                 kt = dict(child.dtypes).get(rk, "string")
+                ve = f"__ve_{rs}_{rk}"
                 if kt in ("bigint", "int", "smallint", "tinyint"):
-                    vd = vd.withColumn(
-                        f"__ve_{rs}_{rk}", F.col(f"__ve_{rs}_{rk}").cast(kt)
-                    )
-                    cond = child[rk] == vd[f"__ve_{rs}_{rk}"]
+                    vd = vd.withColumn(ve, _col(ve).cast(kt))
+                    cond = child[rk] == vd[sql_ident(ve)]
                 else:
-                    cond = child[rk].cast("string") == vd[f"__ve_{rs}_{rk}"]
-                child = child.join(vd, cond, "left").drop(f"__ve_{rs}_{rk}")
+                    cond = child[rk].cast("string") == vd[sql_ident(ve)]
+                child = child.join(vd, cond, "left").drop(ve)
             aggs = []
             for c in cs:
                 cond = F.lit(True)
@@ -501,12 +564,8 @@ class _ShapeEvaluator:
                     )
                 if c.kind == "qualified_shape":
                     rs = c.params["shape"]
-                    rk = c.params.get("ref_key") or self._ref_entity_col(
-                        rs, child_name
-                    )
-                    cond = cond & F.coalesce(
-                        F.col(f"__v_{rs}_{rk}"), F.lit(True)
-                    )
+                    rk = c.params.get("ref_key") or self._ref_entity_cols[rs]
+                    cond = cond & F.coalesce(_col(f"__v_{rs}_{rk}"), F.lit(True))
                 if c.kind == "reconcile":
                     amt = F.expr(c.params["amount"]).cast("long")
                     aggs.append(F.sum(F.when(cond, amt)).alias(f"sum_{c.id}"))
@@ -523,29 +582,28 @@ class _ShapeEvaluator:
             ent = ent.join(agg, join_key == agg["__fk"], "left").drop("__fk")
             for c in cs:
                 if c.kind == "reconcile":
-                    dec = "decimal(38,0)"
-                    exp = F.col(f"__exp_{c.id}")
-                    act = F.coalesce(
-                        F.col(f"sum_{c.id}"), F.lit(0).cast("long")
-                    )
+                    e = sql_ident(f"__exp_{c.id}")
+                    dec = "DECIMAL(38,0)"
+                    exp = f"CAST({e} AS {dec})"
+                    act = sql_ident(f"sum_{c.id}")
+                    act = f"CAST(coalesce({act}, CAST(0 AS BIGINT)) AS {dec})"
                     tol = int(c.params.get("tol_ppm", 0))
-                    diff = F.abs(act.cast(dec) - exp.cast(dec))
-                    bools[c.id] = exp.isNull() | (
-                        diff * F.lit(1_000_000).cast(dec)
-                        <= F.lit(tol).cast(dec) * F.abs(exp.cast(dec))
+                    bools[c.id] = (
+                        f"{e} IS NULL OR abs({act} - {exp}) * CAST(1000000 AS {dec})"
+                        f" <= CAST({tol} AS {dec}) * abs({exp})"
                     )
                     continue
-                cnt = F.coalesce(F.col(f"cnt_{c.id}"), F.lit(0))
-                pred = F.lit(True)
+                cnt = f"coalesce({sql_ident(f'cnt_{c.id}')}, 0)"
+                preds = []
                 if c.kind == "min_count" or (
                     c.kind == "qualified_shape" and c.params.get("min") is not None
                 ):
-                    pred = pred & (cnt >= F.lit(int(c.params["min"])))
+                    preds.append(f"{cnt} >= {int(c.params['min'])}")
                 if c.kind == "max_count" or (
                     c.kind == "qualified_shape" and c.params.get("max") is not None
                 ):
-                    pred = pred & (cnt <= F.lit(int(c.params["max"])))
-                bools[c.id] = pred
+                    preds.append(f"{cnt} <= {int(c.params['max'])}")
+                bools[c.id] = " AND ".join(preds) or "true"
 
         # monotonic constraints: one (entity, order_key) pre-aggregate plus
         # one entity-window pass per distinct order_by column, every
@@ -577,17 +635,16 @@ class _ShapeEvaluator:
                 .orderBy("__mo")
                 .rowsBetween(Window.unboundedPreceding, -1)
             )
+            oks = {}
             for c in cs:
-                lo = F.col(f"__mlo_{c.id}")
-                prev = F.max(F.col(f"__mhi_{c.id}")).over(w)
+                lo = _col(f"__mlo_{c.id}")
+                prev = F.max(_col(f"__mhi_{c.id}")).over(w)
                 # NULL lo: the group's values are all NULL — ignored
                 # (not_null's job); NULL prev: no earlier non-null value
-                g = g.withColumn(
-                    f"__mok_{c.id}", lo.isNull() | prev.isNull() | (lo >= prev)
-                )
-            ment = g.groupBy("__me").agg(
+                oks[f"__mok_{c.id}"] = lo.isNull() | prev.isNull() | (lo >= prev)
+            ment = g.withColumns(oks).groupBy("__me").agg(
                 *[
-                    F.bool_and(F.col(f"__mok_{c.id}")).alias(f"__mono_{c.id}")
+                    F.bool_and(_col(f"__mok_{c.id}")).alias(f"__mono_{c.id}")
                     for c in cs
                 ]
             )
@@ -597,16 +654,9 @@ class _ShapeEvaluator:
             for c in cs:
                 # entities absent from the aggregate (every order key NULL)
                 # are vacuously valid
-                bools[c.id] = F.coalesce(
-                    F.col(f"__mono_{c.id}"), F.lit(True)
-                )
+                bools[c.id] = f"coalesce({sql_ident(f'__mono_{c.id}')}, true)"
 
         return ent, bools
-
-    def _ref_entity_col(self, ref_shape: str, child_table: str) -> str:
-        """Join key for a qualified ref: the referenced shape's entity column
-        (the referenced shape's table is the child table)."""
-        return self._ref_entity_cols[ref_shape]
 
     def evaluate(
         self, hold: Callable[[DataFrame], DataFrame] | None = None
@@ -619,90 +669,64 @@ class _ShapeEvaluator:
         re-running the shape's plan."""
         ent, bools = self.entity_bools()
 
-        # top-level combine honoring or_groups, in declaration order
-        top: list[tuple[Constraint, Column]] = []
+        # top-level combine honoring or_groups, in declaration order: each
+        # top-level constraint's bool, never NULL (unbound ⇒ valid)
+        def ok(c: Constraint) -> str:
+            return f"coalesce(({bools[c.id]}), true)"
+
+        top: list[Constraint] = []
+        oks: list[str] = []
         for c in self.shape.constraints:
             if c.kind in DATASET_KINDS:
                 continue  # dataset-level, handled by the engine
+            top.append(c)
             if c.kind == "or_group":
-                col = F.lit(False)
-                for b in c.branches:
-                    col = col | F.coalesce(bools[b.id], F.lit(True))
-                top.append((c, col))
+                oks.append("(" + (" OR ".join(map(ok, c.branches)) or "false") + ")")
             else:
-                top.append((c, F.coalesce(bools[c.id], F.lit(True))))
-
-        valid = F.lit(True)
-        for _, col in top:
-            valid = valid & col
-
-        reason: Column = F.lit(None).cast("string")
-        for c, col in reversed(top):
-            rsn = (
-                c.params["shape"] if c.kind == "qualified_shape" else c.id
-            )
-            reason = F.when(~col, F.lit(rsn)).otherwise(reason)
+                oks.append(ok(c))
 
         # the frame keeps each top-level verdict and the counts the
         # violation details print: booleans and integers, never NULL (the
         # columnar cache stores NULLs as 4-byte positions)
         counted_kinds = ("min_count", "max_count", "qualified_shape")
-        counted = [c for c, _ in top if c.kind in counted_kinds]
-        ent = ent.select(
+        cnts = [sql_ident(f"cnt_{c.id}") for c in top if c.kind in counted_kinds]
+        n_rows = ["__n_rows"] if any(c.kind == "unique" for c in top) else []
+        ok_cols = [f"__ok{i}" for i in range(len(top))]
+        valid, reason = verdict_sql(top, ok_cols)
+        ent = ent.selectExpr(
             "entity_id",
-            valid.alias("__valid"),
-            reason.alias("__reason"),
-            *[col.alias(f"__ok{i}") for i, (_, col) in enumerate(top)],
-            *[
-                F.coalesce(F.col(f"cnt_{c.id}"), F.lit(0)).alias(f"cnt_{c.id}")
-                for c in counted
-            ],
-            *(["__n_rows"] if any(c.kind == "unique" for c, _ in top) else []),
+            *[f"{sql} AS {n}" for sql, n in zip(oks, ok_cols)],
+            *[f"coalesce({n}, 0) AS {n}" for n in cnts],
+            *n_rows,
+        ).selectExpr(
+            "entity_id",
+            f"{valid} AS __valid",
+            f"{reason} AS __reason",
+            *ok_cols,
+            *cnts,
+            *n_rows,
         )
         if hold is not None:
             ent = hold(ent)
 
-        verdicts = ent.select(
-            F.col("entity_id").cast("string").alias("entity_id"),
-            F.lit(self.shape.name).alias("shape"),
-            F.col("__valid").alias("is_valid"),
-            F.col("__reason").alias("reason"),
+        entity_id = "CAST(entity_id AS STRING) AS entity_id"
+        shape = f"{sql_str(self.shape.name)} AS shape"
+        verdicts = ent.selectExpr(
+            entity_id, shape, "__valid AS is_valid", "__reason AS reason"
         )
 
-        viol_structs = []
-        for i, (c, _) in enumerate(top):
-            detail = F.lit(describe(c))
+        details = []
+        for c in top:
+            detail = sql_str(describe(c))
             if c.kind in counted_kinds:
-                detail = F.format_string(
-                    "%s [count=%d]", detail, F.col(f"cnt_{c.id}")
-                )
+                cnt = sql_ident(f"cnt_{c.id}")
+                detail = f"format_string('%s [count=%d]', {detail}, {cnt})"
             elif c.kind == "unique":
-                detail = F.format_string(
-                    "%s [rows=%d]", detail, F.col("__n_rows")
-                )
-            viol_structs.append(
-                F.when(
-                    ~F.col(f"__ok{i}"),
-                    F.struct(
-                        F.lit(c.id).alias("constraint_id"),
-                        detail.alias("detail"),
-                    ),
-                )
-            )
-        if viol_structs:
-            arr = F.filter(F.array(*viol_structs), lambda x: x.isNotNull())
-            violations = ent.select(
-                F.col("entity_id").cast("string").alias("entity_id"),
-                F.lit(self.shape.name).alias("shape"),
-                F.explode(arr).alias("__v"),
-            ).select(
-                "entity_id",
-                "shape",
-                F.col("__v.constraint_id").alias("constraint_id"),
-                F.col("__v.detail").alias("detail"),
-            )
-        else:
-            violations = self.spark.createDataFrame([], schema="entity_id string, shape string, constraint_id string, detail string")
+                detail = f"format_string('%s [rows=%d]', {detail}, __n_rows)"
+            details.append(detail)
+        violations = ent.selectExpr(
+            entity_id, shape, violations_sql(top, ok_cols, details)
+        )
         return verdicts, violations
 
 
@@ -741,8 +765,9 @@ def run_suite(
     target_population: "str | DataFrame | dict | None" = None,
     cyclic_seed_verdicts: DataFrame | None = None,
 ) -> SuiteResult:
-    """Validate `tables` against `suite`; returns verdicts + violations +
-    per-bucket summary for the target shapes (all shapes if None).
+    """Validate `tables` against `suite`; returns verdicts + violations
+    (and a per-bucket summary built when read) for the target shapes (all
+    shapes if None).
 
     ``preseeded_verdicts``: shape → verdict DF computed by an earlier run
     (lineage waves reuse helper-shape verdicts this way — the batch analog of
@@ -819,7 +844,6 @@ def run_suite(
         hold: Callable[[DataFrame], DataFrame] | None = None,
     ):
         ev = _ShapeEvaluator(
-            spark,
             shape_by_name[name],
             tables,
             prereq,
@@ -989,11 +1013,9 @@ def run_suite(
         [violations_by_shape[n] for n in keep]
         + [d for d in (drift_vl, sb_vl) if d is not None]
     )
-    summary = V.summarize(verdicts)
     return SuiteResult(
         verdicts=verdicts,
         violations=violations,
-        summary=summary,
         shapes_evaluated=keep,
         verdicts_by_shape=dict(verdicts_by_shape),
         _cached=cached,

@@ -106,8 +106,13 @@ PPM = {
     "__ppm": MAGIC["ppm"],
     "__ppm_w": _ascii_int(4, 5),
     "__ppm_h": _ascii_int(10, 5),
-    # decode_image reads only maxval 255
+    # decode_image reads only maxval 255, and only with the fixed layout's
+    # separators between the fields: "P6\n%5d %5d\n255\n"
     "__ppm_255": _magic(b"255", 16),
+    "__ppm_sep": " AND ".join(
+        _magic(sep, off)
+        for sep, off in ((b"\n", 3), (b" ", 9), (b"\n", 15), (b"\n", 19))
+    ),
 }
 
 SGV1 = {
@@ -140,7 +145,7 @@ _IMAGE_RULE = [
         "__img_bpp": "CASE WHEN __bmp THEN __bmp_bpp WHEN __ppm THEN 24 END",
         "__img_variant_ok": "CASE WHEN __bmp THEN __bmp_bpp = 24"
         " AND __bmp_comp = 0 AND __bmp_planes = 1 AND __bmp_hdr_size >= 40"
-        " ELSE __ppm_255 END",
+        " ELSE __ppm_255 AND __ppm_sep END",
         # dims sanity, checked BEFORE any size product (MAX_DIM); 5 ascii
         # digits cap a PPM side at 99,999, so 3·w·h cannot overflow
         "__img_sane": f"CASE WHEN __bmp THEN __bmp_w BETWEEN 1 AND {MAX_DIM}"

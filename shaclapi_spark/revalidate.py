@@ -449,13 +449,11 @@ def _run_restricted_and_merge(
 
     verdicts = merge(old_verdicts, res.verdicts)
     violations = merge(old_violations, res.violations)
-    summary = V.summarize(verdicts) if verdicts is not None else None
     # the merged frames read the inner run's persisted frames, the
     # affected populations and their diffs: release() drops them all
     return SuiteResult(
         verdicts=verdicts,
         violations=violations,
-        summary=summary,
         shapes_evaluated=res.shapes_evaluated,
         verdicts_by_shape=res.verdicts_by_shape,
         _cached=res._cached + list(pops.values()) + diffs,

@@ -24,7 +24,14 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
-from shaclapi_spark.engine import EngineConfig
+from shaclapi_spark.engine import (
+    EngineConfig,
+    sql_ident,
+    sql_str,
+    verdict_sql,
+    violations_sql,
+    with_derived,
+)
 from shaclapi_spark.ops import audio as audio_ops
 from shaclapi_spark.ops.row_checks import describe, row_predicate
 from shaclapi_spark.suite import ROW_KINDS, Constraint, Shape, Suite
@@ -59,83 +66,45 @@ def row_verdict_stream(
     cs = _row_constraints(shape)
     if shape.target_filter:
         df = df.filter(F.expr(shape.target_filter))
-    # derived columns (Shape.derived_columns): same derive-once-check-many
-    # projection as the batch engine, so expr constraints referencing them
-    # (e.g. the image suite's __img_ok) stream unchanged
-    for dname, dsql in (shape.derived_columns or {}).items():
-        df = df.withColumn(dname, F.expr(dsql))
+    # derived columns (Shape.derived_columns): the batch engine's staged
+    # projection, so expr constraints referencing them (e.g. the image
+    # suite's __img_ok) stream unchanged
+    df = with_derived(df, shape.derived_columns)
 
-    cols: dict[str, Column] = {}
-    cheap_names: list[str] = []
+    def predicate(c: Constraint) -> Column:
+        if c.kind != "or_group":
+            return row_predicate(c)
+        pred = F.lit(False)
+        for b in c.branches:
+            pred = pred | F.coalesce(row_predicate(b), F.lit(True))
+        return pred
+
+    cheap = [c for c in cs if c.kind != "audio_valid"]
+    if cheap:
+        df = df.withColumns({f"b_{c.id}": predicate(c) for c in cheap})
+    # each constraint's bool, never NULL (unbound ⇒ valid)
+    oks = [f"coalesce({sql_ident(f'b_{c.id}')}, true)" for c in cs]
+    precond = " AND ".join(
+        ok for c, ok in zip(cs, oks) if c.kind != "audio_valid" and cfg.short_circuit
+    )
     for c in cs:
         if c.kind == "audio_valid":
-            continue
-        name = f"b_{c.id}"
-        if c.kind == "or_group":
-            pred = F.lit(False)
-            for b in c.branches:
-                pred = pred | F.coalesce(row_predicate(b), F.lit(True))
-        else:
-            pred = row_predicate(c)
-        df = df.withColumn(name, pred)
-        cols[c.id] = F.col(name)
-        cheap_names.append(name)
+            df = audio_ops.with_audio_check(
+                df,
+                f"b_{c.id}",
+                c.params["column"],
+                float(c.params.get("min_snr_db", audio_ops.MIN_SNR_DB)),
+                precondition=F.expr(precond or "true"),
+            )
 
-    for c in cs:
-        if c.kind != "audio_valid":
-            continue
-        name = f"b_{c.id}"
-        pre = F.lit(True)
-        if cfg.short_circuit:
-            for n in cheap_names:
-                pre = pre & F.coalesce(F.col(n), F.lit(True))
-        df = audio_ops.with_audio_check(
-            df,
-            name,
-            c.params["column"],
-            float(c.params.get("min_snr_db", audio_ops.MIN_SNR_DB)),
-            precondition=pre,
-        )
-        cols[c.id] = F.col(name)
-
-    valid = F.lit(True)
-    for c in cs:
-        valid = valid & F.coalesce(cols[c.id], F.lit(True))
-    reason = F.lit(None).cast("string")
-    for c in reversed(cs):
-        reason = F.when(
-            ~F.coalesce(cols[c.id], F.lit(True)), F.lit(c.id)
-        ).otherwise(reason)
-
-    ent = F.col(shape.entity_col).cast("string")
-    verdicts = df.select(
-        ent.alias("entity_id"),
-        F.lit(shape.name).alias("shape"),
-        valid.alias("is_valid"),
-        reason.alias("reason"),
+    valid, reason = verdict_sql(cs, oks)
+    entity_id = f"CAST({sql_ident(shape.entity_col)} AS STRING) AS entity_id"
+    shape_name = f"{sql_str(shape.name)} AS shape"
+    verdicts = df.selectExpr(
+        entity_id, shape_name, f"{valid} AS is_valid", f"{reason} AS reason"
     )
-    viol_structs = [
-        F.when(
-            ~F.coalesce(cols[c.id], F.lit(True)),
-            F.struct(
-                F.lit(c.id).alias("constraint_id"),
-                F.lit(describe(c)).alias("detail"),
-            ),
-        )
-        for c in cs
-    ]
-    violations = df.select(
-        ent.alias("entity_id"),
-        F.lit(shape.name).alias("shape"),
-        F.explode(
-            F.filter(F.array(*viol_structs), lambda x: x.isNotNull())
-        ).alias("__v"),
-    ).select(
-        "entity_id",
-        "shape",
-        F.col("__v.constraint_id").alias("constraint_id"),
-        F.col("__v.detail").alias("detail"),
-    )
+    details = [sql_str(describe(c)) for c in cs]
+    violations = df.selectExpr(entity_id, shape_name, violations_sql(cs, oks, details))
     return verdicts, violations
 
 

@@ -293,6 +293,11 @@ MISALIGNED_PPM = {
 }
 # fixed-width, but maxval 0: decode_image reads only maxval 255
 BAD_MAXVAL_PPM = {"ppm_maxval_0": b"P6\n    8     6\n  0\n" + bytes(144)}
+# fixed-width fields, but a wrong byte between them: decode_image raises
+BAD_SEPARATOR_PPM = {
+    "ppm_sep_after_w": b"P6\n    8X    6\n255\n" + bytes(144),
+    "ppm_sep_after_maxval": b"P6\n    8     6\n255X" + bytes(144),
+}
 
 
 def test_misaligned_ppm_headers_fail_closed(spark):
@@ -300,7 +305,7 @@ def test_misaligned_ppm_headers_fail_closed(spark):
 
     from shaclapi_spark import fixtures
 
-    cases = {**MISALIGNED_PPM, **BAD_MAXVAL_PPM}
+    cases = {**MISALIGNED_PPM, **BAD_MAXVAL_PPM, **BAD_SEPARATOR_PPM}
     df = spark.createDataFrame(
         [Row(img_id=k, bytes=v) for k, v in cases.items()],
         StructType(
@@ -320,6 +325,9 @@ def test_misaligned_ppm_headers_fail_closed(spark):
         assert meta[k]["width"] is None and meta[k]["height"] is None
     with pytest.raises(ValueError, match="unsupported PPM variant"):
         im.decode_image(BAD_MAXVAL_PPM["ppm_maxval_0"])
+    for blob in BAD_SEPARATOR_PPM.values():
+        with pytest.raises(ValueError):
+            im.decode_image(blob)
 
 
 def _ppm_field_ref(field: bytes):
