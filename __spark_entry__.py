@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from shaclapi_spark import fixture_io, fixtures, oracle
 from shaclapi_spark import verdicts as V
-from shaclapi_spark.datagen import fixture_n_clips
 from shaclapi_spark.engine import EngineConfig, run_suite
 from shaclapi_spark.ops import diff as diff_ops
 from shaclapi_spark.ops import drift as drift_ops
@@ -58,7 +57,7 @@ except Exception:
 
 
 def _clip_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    n = fixture_n_clips(sf_dir)
+    n = fixture_io.fixture_n_clips(sf_dir)
     paths = fixture_io.ensure_fixture_pandas(n)
     return {
         name: spark.read.parquet(paths[name])
@@ -1589,7 +1588,7 @@ def q_multimodal_byte_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _av_tables(spark: SparkSession, sf_dir: str) -> tuple:
-    n = fixture_n_clips(sf_dir)
+    n = fixture_io.fixture_n_clips(sf_dir)
     paths = fixture_io.ensure_fixture_pandas(n)
     return (
         spark.read.parquet(paths["images"]),

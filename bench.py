@@ -77,16 +77,19 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
 
-    from shaclapi_spark import datagen, fixtures
+    from shaclapi_spark import fixture_io, fixtures
     from shaclapi_spark.engine import EngineConfig, run_suite
     from shaclapi_spark.ops import stats as stats_ops
     from shaclapi_spark.pipeline import dedup as dd
     import __spark_entry__ as entry_mod
 
-    n_clips = datagen.fixture_n_clips(sf_dir)
+    n_clips = fixture_io.fixture_n_clips(sf_dir)
     bench_root = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_fixtures")
-    paths = datagen.ensure_fixture(spark, os.path.join(bench_root, f"n{n_clips}"), n_clips)
-    tables = {name: spark.read.parquet(p) for name, p in paths.items()}
+    paths = fixture_io.ensure_fixture_pandas(n_clips, root=bench_root)
+    tables = {
+        name: spark.read.parquet(paths[name])
+        for name in ("clips", "transcripts", "ref_histograms")
+    }
     cfg = EngineConfig(short_circuit=True)
 
     sentinel_start = noise_sentinel()

@@ -3,7 +3,7 @@ bench families (round-4 verdict item 3).
 
 The sandbox's driver testdata stops at sf0.1 (documents 5k, embeddings 2k,
 events 100k); the clip families already have real 10x sf1 fixtures
-(datagen.ensure_fixture at 2M clips), but the doc/dedup/ANN/corpus/event
+(fixture_io.ensure_fixture_pandas at 2M clips), but the doc/dedup/ANN/corpus/event
 queries reran at sf0.1 via symlink in round 4 — a steady-state cross-check,
 not scale evidence. This script synthesizes a DISTRIBUTION-MATCHED 10x
 version of the three aux tables (seeded, no external data):

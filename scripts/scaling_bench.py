@@ -37,22 +37,13 @@ def build_zip() -> str:
 
 
 def ensure_fixture(n_clips: int) -> str:
-    out = os.path.join(REPO, ".bench_fixtures", f"n{n_clips}")
-    marker = os.path.join(out, f"_FIXTURE_OK_{n_clips}")
-    if not os.path.exists(marker):
-        code = (
-            "from pyspark.sql import SparkSession\n"
-            "import sys; sys.path.insert(0, %r)\n"
-            "from shaclapi_spark import datagen\n"
-            "s = (SparkSession.builder.master('local[32]')"
-            ".config('spark.sql.shuffle.partitions','32')"
-            ".config('spark.ui.enabled','false')"
-            ".config('spark.driver.memory','16g').getOrCreate())\n"
-            "datagen.ensure_fixture(s, %r, %d)\n"
-            "s.stop()\n" % (REPO, out, n_clips)
-        )
-        subprocess.run([sys.executable, "-c", code], check=True)
-    return out
+    """The fixture directory, written once (single process, one row group
+    in memory at a time) and reused by every launch."""
+    sys.path.insert(0, REPO)
+    from shaclapi_spark import fixture_io
+
+    paths = fixture_io.ensure_fixture_pandas(n_clips, root=os.path.join(REPO, ".bench_fixtures"))
+    return os.path.dirname(paths["clips"])
 
 
 def run_once(threads: int, fixture_dir: str, zpath: str, reps: int) -> dict:

@@ -66,14 +66,7 @@ def main() -> None:
         # waves, the second one 1 task wide); too many pay a Python-worker
         # round trip per task. Identical at both parallelism levels (input-
         # size-driven), so the N/4N decomposition stays comparable.
-        import glob as _glob
-
-        clip_bytes = sum(
-            os.path.getsize(p)
-            for p in _glob.glob(
-                os.path.join(args.fixture_dir, "clips.parquet", "*.parquet")
-            )
-        )
+        clip_bytes = os.path.getsize(os.path.join(args.fixture_dir, "clips.parquet"))
         target = max(16 * 2**20, min(256 * 2**20, clip_bytes // 256))
         args.max_partition_bytes = str(target)
 

@@ -96,7 +96,7 @@ LEFT JOIN child_agg a ON a.clip_id = r.clip_id
 
 
 def clips_table_expr(path: str) -> str:
-    return f"read_parquet('{path}/**/*.parquet')"
+    return f"read_parquet('{path}')"
 
 
 def cycle_verdict_union_sql(clips: str, transcripts: str, iters: int = 6) -> str:

@@ -37,7 +37,7 @@ come out.
 100-TB design: stats per image/frame are O(pixels) numpy inside the Arrow
 batch; output rows are tiny and map-combinable downstream. Fleet-scale
 decode parallelism comes from parquet row-group splits (fixture_io writes
-5k-row groups for exactly this reason).
+images in 2 500-row and videos in 1 250-row groups for exactly this reason).
 """
 
 from __future__ import annotations

@@ -25,15 +25,16 @@ def spark():
 
 
 @pytest.fixture(scope="session")
-def fixture_dir(spark, tmp_path_factory):
-    """Small deterministic clips fixture shared by the test session."""
-    from shaclapi_spark import datagen
+def fixture_dir():
+    """The 2 000-clip fixture (table and marker paths) that the contract and
+    the imagery tests also read."""
+    from shaclapi_spark import fixture_io
 
-    out = str(tmp_path_factory.mktemp("fixtures"))
-    paths = datagen.ensure_fixture(spark, out, n_clips=2000)
-    return paths
+    return fixture_io.ensure_fixture_pandas(2000)
 
 
 @pytest.fixture(scope="session")
 def fixture_tables(spark, fixture_dir):
-    return {name: spark.read.parquet(path) for name, path in fixture_dir.items()}
+    from shaclapi_spark import fixture_io
+
+    return {name: spark.read.parquet(fixture_dir[name]) for name in fixture_io.TABLES}

@@ -363,7 +363,7 @@ def test_release_drops_every_frame_the_call_persisted(spark, fixture_dir, tmp_pa
 
     old = {}
     for t in ("clips", "transcripts"):
-        shutil.copytree(fixture_dir[t], tmp_path / t)
+        shutil.copy(fixture_dir[t], tmp_path / t)
         old[t] = spark.read.parquet(str(tmp_path / t))
     nc, nt = fixtures.mutate_clip_tables(old["clips"], old["transcripts"])
     new = {"clips": nc, "transcripts": nt}

@@ -217,7 +217,7 @@ def test_multiprocessing_soak_releases_cached_frames(spark, fixture_dir, tmp_pat
     app = service.make_app(spark)
     tables = {}
     for t in ("clips", "transcripts", "ref_histograms"):
-        shutil.copytree(fixture_dir[t], tmp_path / t)
+        shutil.copy(fixture_dir[t], tmp_path / t)
         tables[t] = f"parquet:{tmp_path / t}"
     body = urlencode(
         {

@@ -1,5 +1,6 @@
-"""SHACL Turtle ingestion: parse the reference's own shape fixtures
-(/root/reference/tests/tc*/shapes/*.ttl) into the IR, bind them onto
+"""SHACL Turtle ingestion: parse shape files laid out like the reference's
+test cases (tests/fixtures/shacl/tc*/shapes/*.ttl, written after the
+reference's tc1/tc2/tc4/tc6 shape directories) into the IR, bind them onto
 tables, and check the compiled Suite structure matches hand-built
 fixtures — the tc6-style structural assertions of the reference
 (tests/test_main.py:296-403)."""
@@ -17,14 +18,9 @@ from shaclapi_spark.shacl import (
     to_suite,
 )
 
-REF = "/root/reference/tests"
-
-needs_ref = pytest.mark.skipif(
-    not os.path.isdir(REF), reason="reference fixtures not available"
-)
+REF = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "shacl")
 
 
-@needs_ref
 def test_parse_tc1_shapes():
     shapes = {s.name: s for s in parse_shacl_dir(f"{REF}/tc1/shapes/test1_2_3")}
     a, e = shapes["ShapeA"], shapes["ShapeE"]
@@ -38,7 +34,6 @@ def test_parse_tc1_shapes():
     assert (ehas.min_count, ehas.max_count) == (2, 2)
 
 
-@needs_ref
 def test_parse_tc4_inverse_path():
     shapes = {s.name: s for s in parse_shacl_dir(f"{REF}/tc4/shapes")}
     (p,) = shapes["ShapeA"].properties
@@ -48,7 +43,6 @@ def test_parse_tc4_inverse_path():
     assert shapes["ShapeC"].properties == []  # target-only shape
 
 
-@needs_ref
 def test_parse_tc6_or_group():
     shapes = {s.name: s for s in parse_shacl_dir(f"{REF}/tc6/shapes")}
     a = shapes["ShapeA"]
@@ -59,7 +53,6 @@ def test_parse_tc6_or_group():
     assert [p.path for p in a.properties] == ["property3", "belongsTo"]
 
 
-@needs_ref
 def test_parse_tc2_target_query_values():
     shapes = {s.name: s for s in parse_shacl_dir(f"{REF}/tc2/shapes")}
     b = shapes["ShapeB"]
@@ -67,7 +60,6 @@ def test_parse_tc2_target_query_values():
     assert b.target_values() == ["nodeB_1", "nodeB_0"]
 
 
-@needs_ref
 def test_tc1_binding_produces_expected_suite():
     shapes = parse_shacl_dir(f"{REF}/tc1/shapes/test1_2_3")
     bindings = {
@@ -107,7 +99,6 @@ def test_tc1_binding_produces_expected_suite():
     ]
 
 
-@needs_ref
 def test_tc4_binding_inverse_local_key():
     shapes = parse_shacl_dir(f"{REF}/tc4/shapes")
     bindings = {
@@ -134,7 +125,6 @@ def test_tc4_binding_inverse_local_key():
     assert suite.shape("ShapeC").constraints == []
 
 
-@needs_ref
 def test_tc1_end_to_end_validation(spark):
     """Validate a tiny hand-built graph against the parsed tc1 shapes:
     ShapeA targets need exactly one `has` edge and exactly one `belongsTo`
@@ -214,14 +204,9 @@ def test_parser_rejects_unbound_path():
 # the reference's JSON shape format (examples/lubm/shapes/*.json)
 # ---------------------------------------------------------------------------
 
-REF_LUBM = "/root/reference/examples/lubm/shapes"
-
-needs_lubm = pytest.mark.skipif(
-    not os.path.isdir(REF_LUBM), reason="reference LUBM shapes not available"
-)
+REF_LUBM = os.path.join(REF, "lubm", "shapes")
 
 
-@needs_lubm
 def test_parse_lubm_json_shapes():
     from shaclapi_spark.shacl import parse_json_dir
 
@@ -247,7 +232,6 @@ def test_parse_lubm_json_shapes():
     assert prof.properties[-1].qualified_shape == "Department"
 
 
-@needs_lubm
 def test_lubm_json_binding_produces_suite():
     """The LUBM JSON shape dir parses into a Suite through the SAME binding
     layer as the Turtle path — tc6-style structural assertions."""

@@ -9,7 +9,9 @@ from shaclapi_spark import sources
 
 def test_load_tables_from_dir(spark, fixture_dir):
     d = os.path.dirname(fixture_dir["clips"])
-    tables = sources.load_tables(spark, d)
+    tables = sources.load_tables(
+        spark, d, names=("clips", "transcripts", "ref_histograms")
+    )
     assert set(tables) == {"clips", "transcripts", "ref_histograms"}
     assert tables["clips"].count() > 0
 

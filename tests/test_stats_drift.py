@@ -3,7 +3,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from shaclapi_spark import datagen, engine, fixtures, oracle
+from shaclapi_spark import engine, fixtures, oracle
 from shaclapi_spark.ops import drift as drift_ops
 from shaclapi_spark.ops import stats as stats_ops
 
