@@ -14,7 +14,10 @@ Usage:
 The session runs with ``spark.sql.codegen.fallback=false``: a query whose
 generated code fails to compile (e.g. a projection past the JVM's 64 KB
 method limit) fails its row instead of silently running interpreted, and
-the summary counts those rows as codegen-failed.
+the summary counts those rows as codegen-failed. It also lists, report-only,
+the rows whose executed plan scans a Python RDD (``Scan ExistingRDD``, what
+``createDataFrame`` over a Python list or pandas frame plans to): every
+action over such a row starts Python workers.
 """
 
 from __future__ import annotations
@@ -131,12 +134,16 @@ def main() -> int:
         only = argv
     failures = []
     codegen_failed = []
+    rdd_scans = []
     for name, fn in qs.items():
         if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_DIR).toPandas()
+            df = fn(spark, SF_DIR)
+            if "Scan ExistingRDD" in df._jdf.queryExecution().executedPlan().toString():
+                rdd_scans.append(name)
+            sdf = df.toPandas()
         except Exception as e:
             failures.append(name)
             if CODEGEN_FAILURE.search(str(e)):
@@ -175,6 +182,7 @@ def main() -> int:
         f"{len(codegen_failed)} codegen-failed"
         + (f": {codegen_failed}" if codegen_failed else "")
     )
+    print(f"{len(rdd_scans)} python-rdd-scan" + (f": {rdd_scans}" if rdd_scans else ""))
     return 1 if failures else 0
 
 

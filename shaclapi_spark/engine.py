@@ -40,6 +40,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from shaclapi_spark import verdicts as V
+from shaclapi_spark.verdicts import sql_str
 from shaclapi_spark.compiler import EvalGroup, compile_suite
 from shaclapi_spark.ops import audio as audio_ops
 from shaclapi_spark.ops import drift as drift_ops
@@ -102,12 +103,6 @@ def _col(name: str) -> Column:
     """The column literally named ``name`` (dots and backticks included,
     which ``F.col`` would parse)."""
     return F.col(sql_ident(name))
-
-
-def sql_str(s: str) -> str:
-    """``s`` as a Spark SQL string literal (backslash escapes, the parser's
-    default, so ``\\`` and ``'`` are escaped)."""
-    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
 def derived_stages(derived: dict[str, str]) -> list[dict[str, str]]:

@@ -34,6 +34,7 @@ from pyspark.sql.types import BinaryType
 
 from shaclapi_spark.ops.row_checks import row_predicate
 from shaclapi_spark.suite import ROW_KINDS, Constraint, Shape, Suite
+from shaclapi_spark.verdicts import local_rows
 
 _SCHEMA = (
     "entity_id string, shape string, constraint_id string, "
@@ -98,7 +99,7 @@ def violation_evidence(
             )
             out.append(ev)
     if not out:
-        return spark.createDataFrame([], schema=_SCHEMA)
+        return local_rows(spark, [], _SCHEMA)
     res = out[0]
     for other in out[1:]:
         res = res.unionByName(other)

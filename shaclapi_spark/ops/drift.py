@@ -5,7 +5,9 @@ not present in the reference, which has no numeric operators at all
 
 Physical plan: one map-side bin assignment (equal-width, arithmetic only) +
 one tiny groupBy(bin) — a 32-row shuffle regardless of input size; the
-ref histogram and the observed histogram are driver-side numpy after that.
+ref histogram and the observed histogram are driver-side numpy after that,
+and the verdict rows go back as JVM-local relations (verdicts.local_rows),
+so no action over them starts a Python worker.
 """
 
 from __future__ import annotations
@@ -16,30 +18,43 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from shaclapi_spark.suite import Suite
+from shaclapi_spark.verdicts import VERDICT_SCHEMA, VIOLATION_SCHEMA, local_rows
 
 
-def observed_histogram(df: DataFrame, column: str, lo: float, hi: float, n_bins: int) -> np.ndarray:
-    """Fractions per equal-width bin; NULLs excluded, out-of-range clamped to
-    the edge bins (standard PSI practice)."""
-    col = F.col(column).cast("double")
-    bin_expr = F.least(
-        F.lit(n_bins - 1),
-        F.greatest(
-            F.lit(0),
-            F.floor((col - F.lit(lo)) / F.lit((hi - lo) / n_bins)).cast("int"),
-        ),
-    )
-    rows = (
-        df.filter(col.isNotNull())
-        .groupBy(bin_expr.alias("bin"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
+def bin_index(col: Column, lo: float, hi: float, n_bins: int) -> Column:
+    """The equal-width bin of ``col`` over [lo, hi), out-of-range values
+    clamped to the edge bins (standard PSI practice)."""
+    width = F.lit((hi - lo) / n_bins)
+    floor = F.floor((col - F.lit(lo)) / width).cast("int")
+    return F.least(F.lit(n_bins - 1), F.greatest(F.lit(0), floor))
+
+
+def _fractions(rows, n_bins: int) -> np.ndarray:
+    """Per-bin fractions of (bin, n) count rows."""
     counts = np.zeros(n_bins, dtype=np.float64)
     for r in rows:
         counts[int(r.bin)] = float(r.n)
     total = counts.sum()
     return counts / total if total > 0 else counts
+
+
+def _ref_bins(rows) -> tuple[float, float, np.ndarray]:
+    """(lo, hi, fractions) of one column's reference histogram rows."""
+    rs = sorted(rows, key=lambda r: r.bin_lo)
+    ref = np.array([r.ref_frac for r in rs], dtype=np.float64)
+    return float(rs[0].bin_lo), float(rs[-1].bin_hi), ref
+
+
+def observed_histogram(df: DataFrame, column: str, lo: float, hi: float, n_bins: int) -> np.ndarray:
+    """Fractions per equal-width bin (:func:`bin_index`); NULLs excluded."""
+    col = F.col(column).cast("double")
+    rows = (
+        df.filter(col.isNotNull())
+        .groupBy(bin_index(col, lo, hi, n_bins).alias("bin"))
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    return _fractions(rows, n_bins)
 
 
 def ks_psi(obs: np.ndarray, ref: np.ndarray, eps: float = 1e-6) -> tuple[float, float]:
@@ -57,17 +72,11 @@ def drift_metrics(
 ) -> tuple[float, float]:
     """(ks, psi) of df[column] vs the reference histogram rows for `column`.
     The reference table is tiny (n_bins rows per column) — collected driver-side."""
-    ref_rows = sorted(
-        ref_hist.filter(F.col("column_name") == column).collect(),
-        key=lambda r: r.bin_lo,
-    )
+    ref_rows = ref_hist.filter(F.col("column_name") == column).collect()
     if not ref_rows:
         raise ValueError(f"no reference histogram for column {column!r}")
-    lo = float(ref_rows[0].bin_lo)
-    hi = float(ref_rows[-1].bin_hi)
-    ref = np.array([r.ref_frac for r in ref_rows], dtype=np.float64)
-    obs = observed_histogram(df, column, lo, hi, len(ref_rows))
-    return ks_psi(obs, ref)
+    lo, hi, ref = _ref_bins(ref_rows)
+    return ks_psi(observed_histogram(df, column, lo, hi, len(ref)), ref)
 
 
 def evaluate_drift_constraints(
@@ -92,20 +101,11 @@ def evaluate_drift_constraints(
             ref_df = tables[p.get("ref_table", "ref_histograms")]
             key = id(ref_df)
             if key not in ref_cache:
-                by_col: dict[str, tuple[float, float, np.ndarray]] = {}
                 rows = ref_df.collect()  # tiny: n_bins rows per column
-                cols = sorted({r.column_name for r in rows})
-                for cn in cols:
-                    rs = sorted(
-                        (r for r in rows if r.column_name == cn),
-                        key=lambda r: r.bin_lo,
-                    )
-                    by_col[cn] = (
-                        float(rs[0].bin_lo),
-                        float(rs[-1].bin_hi),
-                        np.array([r.ref_frac for r in rs], dtype=np.float64),
-                    )
-                ref_cache[key] = by_col
+                ref_cache[key] = {
+                    cn: _ref_bins([r for r in rows if r.column_name == cn])
+                    for cn in {r.column_name for r in rows}
+                }
             if p["column"] not in ref_cache[key]:
                 raise ValueError(
                     f"no reference histogram for column {p['column']!r}"
@@ -126,19 +126,12 @@ def evaluate_drift_constraints(
             df = df.filter(F.expr(tfilter))
         structs = []
         for _, _shape, c, column, lo, hi, ref in ss:
-            n_bins = len(ref)
             col = F.col(column).cast("double")
-            bin_expr = F.least(
-                F.lit(n_bins - 1),
-                F.greatest(
-                    F.lit(0),
-                    F.floor((col - F.lit(lo)) / F.lit((hi - lo) / n_bins)).cast("int"),
-                ),
-            )
             structs.append(
                 F.struct(
                     F.lit(c.id).alias("cid"),
-                    F.when(col.isNotNull(), bin_expr).alias("bin"),
+                    F.when(col.isNotNull(), bin_index(col, lo, hi, len(ref)))
+                    .alias("bin"),
                 )
             )
         rows = (
@@ -150,13 +143,8 @@ def evaluate_drift_constraints(
             .collect()
         )
         for _, _shape, c, column, lo, hi, ref in ss:
-            counts = np.zeros(len(ref), dtype=np.float64)
-            for r in rows:
-                if r.cid == c.id:
-                    counts[int(r.bin)] = float(r.n)
-            total = counts.sum()
-            obs_by_spec[(table, tfilter, c.id)] = (
-                counts / total if total > 0 else counts
+            obs_by_spec[(table, tfilter, c.id)] = _fractions(
+                [r for r in rows if r.cid == c.id], len(ref)
             )
 
     vrows, xrows = [], []
@@ -175,19 +163,8 @@ def evaluate_drift_constraints(
             xrows.append(("__dataset__", shape.name, c.id, detail))
     if not vrows:
         return None, None
-    vd = spark.createDataFrame(
-        vrows, schema="entity_id string, shape string, is_valid boolean, reason string"
-    )
-    vl = (
-        spark.createDataFrame(
-            xrows,
-            schema="entity_id string, shape string, constraint_id string, detail string",
-        )
-        if xrows
-        else spark.createDataFrame(
-            [], schema="entity_id string, shape string, constraint_id string, detail string"
-        )
-    )
+    vd = local_rows(spark, vrows, VERDICT_SCHEMA)
+    vl = local_rows(spark, xrows, VIOLATION_SCHEMA)
     return vd, vl
 
 
@@ -235,11 +212,7 @@ def chi2_groups(
     if not hi > lo:
         raise ValueError(f"need hi > lo, got [{lo}, {hi})")
     col = F.col(column).cast("double")
-    width = (hi - lo) / n_bins
-    bin_expr = F.least(
-        F.lit(n_bins - 1),
-        F.greatest(F.lit(0), F.floor((col - F.lit(lo)) / F.lit(width)).cast("int")),
-    )
+    bin_expr = bin_index(col, lo, hi, n_bins)
     counts = (
         df.filter(col.isNotNull())
         .select(bin_expr.alias("bin"), group_pred.cast("int").alias("__a"))

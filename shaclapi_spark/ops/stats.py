@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from shaclapi_spark.verdicts import VERDICT_SCHEMA, VIOLATION_SCHEMA, local_rows
+
 
 def column_stats(df: DataFrame, columns: list[str]) -> DataFrame:
     """One row per column: (column_name, min, max, null_rate, approx_distinct,
@@ -314,7 +316,9 @@ def evaluate_stat_bound_constraints(spark, suite, tables: dict[str, DataFrame]):
     ALL stat_bound constraints over the same (table, target_filter) source
     are fused into ONE aggregate job: an N-metric suite costs one scan and
     one single-row partial-agg exchange, never N sequential jobs. The
-    collected result is one row per source — driver-side work is O(metrics).
+    collected result is one row per source — driver-side work is O(metrics),
+    and the verdict rows go back as JVM-local relations
+    (verdicts.local_rows), so no action over them starts a Python worker.
 
     Semantics: the metric is any aggregate SQL expression over the source;
     the constraint holds iff min <= metric <= max (either bound optional).
@@ -362,14 +366,8 @@ def evaluate_stat_bound_constraints(spark, suite, tables: dict[str, DataFrame]):
                         f"min={p.get('min')} max={p.get('max')}",
                     )
                 )
-    vd = spark.createDataFrame(
-        vrows,
-        schema="entity_id string, shape string, is_valid boolean, reason string",
-    )
-    vl = spark.createDataFrame(
-        xrows,
-        schema="entity_id string, shape string, constraint_id string, detail string",
-    )
+    vd = local_rows(spark, vrows, VERDICT_SCHEMA)
+    vl = local_rows(spark, xrows, VIOLATION_SCHEMA)
     return vd, vl
 
 

@@ -42,6 +42,7 @@ from pyspark.sql.types import (
 )
 
 from shaclapi_spark import audio_codec
+from shaclapi_spark.verdicts import local_rows
 
 TRIM_SCHEMA = StructType(
     [
@@ -594,7 +595,7 @@ def mix_clips(
         keyed.groupBy("__sr", "__b").agg(F.count("*").alias("n")).collect()
     )
     if not counts:
-        return df.sparkSession.createDataFrame([], MIX_SCHEMA)
+        return local_rows(df.sparkSession, [], MIX_SCHEMA.toDDL())
     per_sr: dict = {}
     for r in counts:
         per_sr.setdefault(r["__sr"], {})[r["__b"]] = r["n"]

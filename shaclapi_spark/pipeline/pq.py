@@ -38,6 +38,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.functions import pandas_udf
 
+from shaclapi_spark.verdicts import local_rows
+
 #: fixed-point scale: q(x) = floor(x * SCALE + 0.5)
 SCALE = 1 << 14
 
@@ -343,8 +345,8 @@ def pq_topk_batch(
             "ivf_index_topk_batch) or raise max_queries explicitly"
         )
     if not qrows:
-        return encoded.sparkSession.createDataFrame(
-            [], f"qid string, {id_col} long, pq_dist long, rank int"
+        return local_rows(
+            encoded.sparkSession, [], f"qid string, {id_col} long, pq_dist long, rank int"
         )
 
     id_field = encoded.select(id_col).schema.fields[0]

@@ -59,21 +59,18 @@ SH = "http://www.w3.org/ns/shacl#"
 _TOKEN_RE = re.compile(
     r'"(?:[^"\\]|\\.)*"'      # string literal
     r"|<[^>]*>"               # IRI
+    r"|#[^\n]*"               # comment, to end of line
     r"|@prefix"
     r"|[\[\]();,]"            # structural
     r"|\.(?=\s|$)"            # statement terminator (never inside a CURIE)
-    r"|[^\s\[\]();,]+"        # CURIE / number / 'a'
+    r"|[^\s\[\]();,#]+"       # CURIE / number / 'a'
 )
 
 
 def _tokenize(text: str) -> list[str]:
-    # strip comments (no '#' inside IRIs/strings in the supported subset is
-    # a hash-terminated prefix IRI — keep it by only stripping '# ' comments
-    # that start a line or follow whitespace outside <> and "")
-    out: list[str] = []
-    for m in _TOKEN_RE.finditer(text):
-        out.append(m.group(0))
-    return out
+    # a '#' inside an IRI or a string literal is consumed by those
+    # alternatives first, so only a real comment starts a '#' token
+    return [t for t in _TOKEN_RE.findall(text) if not t.startswith("#")]
 
 
 class _Parser:

@@ -25,6 +25,8 @@ import math
 
 from pyspark.sql import DataFrame, functions as F
 
+from shaclapi_spark.ops.drift import bin_index
+
 
 def windowed_psi(
     stream: DataFrame,
@@ -53,11 +55,7 @@ def windowed_psi(
     q = [(f + eps) / qsum for f in ref_fracs]
 
     col = F.col(value_col).cast("double")
-    width = (hi - lo) / n_bins
-    bin_expr = F.least(
-        F.lit(n_bins - 1),
-        F.greatest(F.lit(0), F.floor((col - F.lit(lo)) / F.lit(width)).cast("int")),
-    )
+    bin_expr = bin_index(col, lo, hi, n_bins)
     counts = [
         F.sum(F.when(F.col("__bin") == i, 1).otherwise(0)).alias(f"__c{i}")
         for i in range(n_bins)

@@ -27,7 +27,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 from shaclapi_spark.engine import (
     EngineConfig,
     sql_ident,
-    sql_str,
     verdict_sql,
     violations_sql,
     with_derived,
@@ -35,6 +34,7 @@ from shaclapi_spark.engine import (
 from shaclapi_spark.ops import audio as audio_ops
 from shaclapi_spark.ops.row_checks import describe, row_predicate
 from shaclapi_spark.suite import ROW_KINDS, Constraint, Shape, Suite
+from shaclapi_spark.verdicts import sql_str
 
 
 def _row_constraints(shape: Shape) -> list[Constraint]:

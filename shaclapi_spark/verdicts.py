@@ -15,10 +15,35 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-VERDICT_COLS = ["entity_id", "shape", "is_valid", "reason"]
-VIOLATION_COLS = ["entity_id", "shape", "constraint_id", "detail"]
+VERDICT_SCHEMA = "entity_id string, shape string, is_valid boolean, reason string"
+VIOLATION_SCHEMA = "entity_id string, shape string, constraint_id string, detail string"
+
+
+def sql_str(s: str) -> str:
+    """``s`` as a Spark SQL string literal (backslash escapes, the parser's
+    default, so ``\\`` and ``'`` are escaped)."""
+    return "'" + s.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def sql_lit(v: str | bool | int | None) -> str:
+    """``v`` as a Spark SQL literal."""
+    if isinstance(v, str):
+        return sql_str(v)
+    return "NULL" if v is None else str(v).lower()
+
+
+def local_rows(spark: SparkSession, rows: list[tuple], schema: str) -> DataFrame:
+    """A few driver-side ``rows`` as a one-partition relation of the DDL
+    ``schema``, built in the JVM: a literal array inlined over a one-row
+    range. (``createDataFrame`` on a Python list scans a Python RDD, so
+    every action over it starts Python workers.) No rows: a typed empty
+    relation."""
+    structs = ", ".join(f"struct({', '.join(map(sql_lit, r))})" for r in rows)
+    return spark.range(0, 1, 1, 1).selectExpr(
+        f"inline(CAST(array({structs}) AS ARRAY<STRUCT<{schema}>>))"
+    )
 
 
 def union_all(dfs: list[DataFrame]) -> DataFrame | None:

@@ -300,6 +300,15 @@ def test_mix_clips_negative_floor(spark):
     assert out["y"].mix_md5 == hashlib.md5(b"-2").hexdigest()
 
 
+def test_mix_clips_without_rows_is_typed_and_jvm_local(spark):
+    out = at.mix_clips(
+        spark.createDataFrame([], "clip_id string, sr_hz int, bytes binary")
+    )
+    assert out.schema == at.MIX_SCHEMA
+    assert "Scan ExistingRDD" not in out._jdf.queryExecution().executedPlan().toString()
+    assert out.collect() == []
+
+
 def _expected_mask(cid, s, sr, mask_ms=200, n_masks=2):
     n = len(s)
     L = max(min(sr * mask_ms // 1000, n), 1)

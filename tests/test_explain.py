@@ -96,3 +96,12 @@ def test_evidence_covers_only_violating_entities(spark, fixture_tables, run):
         ).collect()
     }
     assert pairs == bad
+
+
+def test_no_selected_constraint_gives_typed_empty_jvm_local_rows(spark, fixture_tables, run):
+    ev = _ev(spark, fixture_tables, run, ["no_such_constraint"])
+    assert ev.columns == [
+        "entity_id", "shape", "constraint_id", "source_table", "evidence"
+    ]
+    assert "Scan ExistingRDD" not in ev._jdf.queryExecution().executedPlan().toString()
+    assert ev.collect() == []

@@ -13,7 +13,8 @@ stat_bound — dataset-grain aggregate bounds (null-rate / row-count /
 import duckdb
 from pyspark.sql import functions as F
 
-from shaclapi_spark import engine, oracle
+from shaclapi_spark import engine, fixtures, oracle
+from shaclapi_spark.ops import drift as drift_ops, stats as stats_ops
 from shaclapi_spark.suite import Constraint, Shape, Suite
 
 
@@ -213,3 +214,61 @@ def test_stat_bound_min_violation_detail(spark):
     assert len(viol) == 1
     assert viol[0].constraint_id == "sb_lo"
     assert "value=2.0" in viol[0].detail and "min=5" in viol[0].detail
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_stat_bound_rows_scan_no_python_rdd(spark, fixture_tables):
+    res = engine.run_suite(spark, _statbound_suite(1.0, 0.0), fixture_tables)
+    for df in (res.verdicts, res.violations):
+        assert "Scan ExistingRDD" not in _plan(df)
+
+
+def test_stat_bound_rows_round_trip_quotes_and_backslashes(spark):
+    df = spark.createDataFrame(
+        [("e1", "opus"), ("e2", "opus"), ("e3", "flac")],
+        schema="eid string, codec string",
+    )
+    name, cid = "O'Brien\\Shape", "sb_'q\\"
+    metric = "count(CASE WHEN codec = 'opus' THEN 1 END)"
+    suite = Suite(
+        shapes=[
+            Shape(
+                name=name,
+                table="t",
+                entity_col="eid",
+                constraints=[
+                    Constraint(
+                        cid, "stat_bound", {"metric": metric, "max": 1, "columns": ["codec"]}
+                    )
+                ],
+            )
+        ]
+    )
+    res = engine.run_suite(spark, suite, {"t": df})
+    (v,) = res.verdicts.filter(F.col("entity_id") == "__dataset__").collect()
+    assert (v.shape, v.is_valid, v.reason) == (name, False, cid)
+    (x,) = res.violations.collect()
+    assert (x.shape, x.constraint_id) == (name, cid)
+    assert x.detail == f"stat_bound({metric}) value=2.0 min=None max=1"
+
+
+def test_dataset_rows_without_violations_are_typed_empty(spark, fixture_tables):
+    lax = fixtures.clip_suite(include_audio=False, include_drift=True)
+    for shape in lax.shapes:
+        for c in shape.constraints:
+            if c.kind == "drift":
+                c.params["max_psi"] = 1e9
+    for vd, vl in (
+        drift_ops.evaluate_drift_constraints(spark, lax, fixture_tables),
+        stats_ops.evaluate_stat_bound_constraints(
+            spark, _statbound_suite(1.0, 1e12), fixture_tables
+        ),
+    ):
+        assert vd.count() == 2 and vd.filter("is_valid").count() == 2
+        assert vl.schema.simpleString() == (
+            "struct<entity_id:string,shape:string,constraint_id:string,detail:string>"
+        )
+        assert vl.collect() == []

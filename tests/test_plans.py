@@ -2,6 +2,8 @@
 claims in the docstrings (shuffle-free, map-side combinable) are pinned
 here so a refactor that silently adds an exchange fails a test."""
 
+import re
+
 import pytest
 from pyspark.sql import Row, functions as F
 
@@ -276,3 +278,20 @@ def test_drop_hot_groups_is_broadcast_anti_join(spark, docs):
     # the only exchanges are the hot-set aggregate's own (small side) +
     # its broadcast; the probe side reads straight from the scan
     assert "BroadcastExchange" in plan
+
+
+def test_clip_suite_enters_python_only_for_the_snr_udf(spark, fixture_tables):
+    """The SNR UDF is the suite's one Python boundary: the drift verdict
+    rows are JVM-local, so neither action over the result scans a Python
+    RDD (each such scan starts Python workers). Nodes are counted by their
+    distinct text: a cached relation that already ran prints its final and
+    its initial plan, so one node can appear twice."""
+    from shaclapi_spark import engine, fixtures
+
+    suite = fixtures.clip_suite(include_audio=True, include_drift=True)
+    res = engine.run_suite(spark, suite, fixture_tables)
+    for df in (res.verdicts, res.violations):
+        plan = _plan(df)
+        assert "Scan ExistingRDD" not in plan
+        assert len(set(re.findall(r"ArrowEvalPython \[.*", plan))) == 1
+    res.release()

@@ -608,3 +608,34 @@ def test_bare_values_with_no_recognizable_ids_raises_in_to_suite():
     )
     with pytest.raises(ValueError, match="'S'"):
         to_suite(shapes, {"S": _star_binding()})
+
+
+_COMMENTED_TTL = """# a comment line before the prefixes
+@prefix : <http://example.org/> .  # trailing comment after a prefix
+@prefix sh: <http://www.w3.org/ns/shacl#> .
+
+# a whole-line comment before the subject
+:ShapeA a sh:NodeShape ;  # trailing comment after ';'
+  sh:targetQuery "SELECT ?x WHERE { ?x a <http://example.org/ns#C> } # kept" ;
+  sh:property [
+    sh:path :has ;
+    # a comment inside a blank node
+    sh:minCount 1
+  ] .  # trailing comment after '.'
+"""
+
+
+def test_turtle_comments_are_stripped():
+    (a,) = parse_shacl(_COMMENTED_TTL)
+    assert a.name == "ShapeA"
+    (has,) = a.properties
+    assert (has.path, has.min_count) == ("has", 1)
+    # '#' inside a string literal is not a comment
+    assert a.target_query.endswith("<http://example.org/ns#C> } # kept")
+
+
+def test_turtle_comment_stripping_keeps_hash_iris_and_strings():
+    from shaclapi_spark.shacl import _tokenize
+
+    toks = _tokenize('@prefix sh: <http://www.w3.org/ns/shacl#> . # gone\n"a # b" .')
+    assert toks == ["@prefix", "sh:", "<http://www.w3.org/ns/shacl#>", ".", '"a # b"', "."]
